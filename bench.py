@@ -346,7 +346,7 @@ def _git_head() -> str | None:
 def fold_with_mirror(
     timings: dict, sf, notes_text: str | None = None, now=None,
     max_age_hours: float = MIRROR_FOLD_HOURS, head: str | None = None,
-    cpus: int | None = "unset",
+    *, cpus: int | None,
 ) -> tuple[dict, dict | None, dict | None, dict | None]:
     """Fold each key to the min across this run and the round's recent
     mirrored clean lines (r8 VERDICT #1).
@@ -360,15 +360,14 @@ def fold_with_mirror(
     the window as before — the fold_source provenance still names every
     borrowed line.
 
-    CPU-count gate (r15; r14 VERDICT "Next #2"): when ``cpus`` is passed
-    (the CLI path always passes ``_bench_cpus()``), only mirrored lines
-    recorded at the SAME core count fold in — equality includes
-    both-None.  Without this gate the r14 driver's 8-core scaling run
-    folded every key to same-day 32-core minima and the scaling block
-    read all-1.0 (``suspect_cpus_ignored``).  Mismatches are counted
-    under ``fold_info["skipped_other_cpus"]``.  The sentinel default
-    ``"unset"`` (parameter omitted entirely — legacy unit-test callers)
-    keeps the pre-r15 behavior of ignoring the field.
+    CPU-count gate (r15; r14 VERDICT "Next #2"): ``cpus`` is required
+    and keyword-only (the CLI path passes ``_bench_cpus()``); only
+    mirrored lines recorded at the SAME core count fold in — equality
+    includes both-None, so ``cpus=None`` folds only unstamped lines.
+    Without this gate the r14 driver's 8-core scaling run folded every
+    key to same-day 32-core minima and the scaling block read all-1.0
+    (``suspect_cpus_ignored``).  Mismatches are counted under
+    ``fold_info["skipped_other_cpus"]``.
 
     Returns (folded_timings, fold_info, raw_this_run, fold_source):
     - folded_timings: per-key min(this run, recent same-sf/-head lines)
@@ -410,7 +409,7 @@ def fold_with_mirror(
             # dirty runs share the marker but not necessarily the code
             skipped_other_head += 1
             continue
-        if cpus != "unset" and rec.get("cpus") != cpus:
+        if rec.get("cpus") != cpus:
             # a line recorded at a different (or unstamped) core count is
             # a different machine shape, not a quieter window
             skipped_other_cpus += 1

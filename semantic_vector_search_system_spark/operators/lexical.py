@@ -335,9 +335,11 @@ def _chunk_rows_fast(
     * a chunk is ``" ".join(tokens[p*span : (p+1)*span])`` — exactly
       ``array_join(slice(...), " ")``;
     * ``h`` replays :func:`stable_hash64` via the md5 prefix
-      (``stable_hash64_py``), memoized per DISTINCT chunk per task — a
-      boilerplate-heavy corpus pays one digest per distinct chunk
-      instead of one md5 expression per chunk INSTANCE;
+      (``stable_hash64_py``), memoized per DISTINCT chunk per Arrow
+      batch — a boilerplate-heavy corpus pays one digest per distinct
+      chunk and batch instead of one md5 expression per chunk INSTANCE,
+      and the memo never outgrows one batch (a per-task memo would grow
+      with every distinct chunk of a partition);
     * docs with 0 tokens emit no rows, like posexplode of an empty array.
     """
     import pandas as pd
@@ -349,24 +351,19 @@ def _chunk_rows_fast(
     schema = f"`{doc_id}` {id_type}, pos int, h long, chunk string"
 
     def fn(batches):
-        memo: dict[str, int] = {}
-
-        def h_of(c: str) -> int:
-            v = memo.get(c)
-            if v is None:
-                v = stable_hash64_py(c)
-                memo[c] = v
-            return v
-
         for pdf in batches:
+            memo: dict[str, int] = {}  # chunk -> h, for this batch only
             ids, poss, hs, chunks = [], [], [], []
             for did, t in zip(pdf[doc_id], pdf[doc_text]):
                 toks = py_tokenize(t) if t else []
                 for p in range(-(-len(toks) // span_tokens)):
                     c = " ".join(toks[p * span_tokens:(p + 1) * span_tokens])
+                    h = memo.get(c)
+                    if h is None:
+                        h = memo[c] = stable_hash64_py(c)
                     ids.append(did)
                     poss.append(p)
-                    hs.append(h_of(c))
+                    hs.append(h)
                     chunks.append(c)
             if ids:
                 yield pd.DataFrame(

@@ -868,27 +868,37 @@ def _cogroup_list_topk(
     )
 
 
-def _mask_tombstoned(docs, spark, index_path: str, id_col: str):
-    """Drop superseded/deleted generations from a (pruned) index scan:
-    broadcast anti-join on ``(id, _batch)`` vs the mutable index's
-    tombstone side table (``sources/parquet_index.py``).  No tombstone
-    table or no ``_batch`` column -> the scan is already live.
+def _open_probed_lists(spark, index_path: str, probed: list) -> DataFrame:
+    """Open only the probed inverted lists of a ``partitionBy(cent_id)``
+    index: one ``cent_id=<v>`` directory per probed list, with
+    ``basePath`` = the index root so ``cent_id`` stays a column.
 
-    FAIL-CLOSED (r11 ADVICE, medium): only a genuinely MISSING tombstone
-    table serves unmasked; any other tombstone read error propagates
-    instead of silently resurrecting deleted/superseded vectors."""
-    if "_batch" not in docs.columns:
-        return docs
-    from ..sources.parquet_index import _tombstones_path, read_optional_parquet
-
-    tomb = read_optional_parquet(spark, _tombstones_path(index_path))
-    if tomb is None:
-        return docs
-    return docs.join(
-        F.broadcast(tomb.select(id_col, "_batch")),
-        [id_col, "_batch"],
-        "left_anti",
-    )
+    Opening the root lists every list directory and every file in it —
+    and above Spark's ``parallelPartitionDiscovery.threshold`` (32 paths)
+    that listing is a Spark job of its own, paid on every serve.  Here
+    listing is O(probed lists) directories, driver-side, whatever the
+    list count.  A probed list without a directory (never written, or
+    emptied by a rewrite) contributes nothing.  The root is opened
+    instead when no probed list has a directory (the scan's ``cent_id``
+    filter then yields no rows, or — on an index that keeps ``cent_id``
+    as a data column — the rows it always did), or when a list id is not
+    an int or str, whose directory name Python cannot reproduce."""
+    if all(type(v) in (int, str) for v in probed):
+        jvm = spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(index_path)
+        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        dir_name = (
+            jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .getPartitionPathString
+        )
+        dirs = [
+            jvm.org.apache.hadoop.fs.Path(root, dir_name("cent_id", str(v)))
+            for v in probed
+        ]
+        dirs = [d.toString() for d in dirs if fs.exists(d)]
+        if dirs:
+            return spark.read.option("basePath", root.toString()).parquet(*dirs)
+    return spark.read.parquet(index_path)
 
 
 def ivf_search_partitioned(
@@ -938,7 +948,11 @@ def ivf_search_partitioned(
     filtering ``cent_id IN (probed)`` against a cent_id-partitioned index
     becomes PARTITION PRUNING: only ``~nprobe/n_lists`` of the files are
     ever read. Build the index once with
-    ``write_vector_index(assigned, partition_by="cent_id")``.
+    ``write_vector_index(assigned, partition_by="cent_id")``.  The
+    broadcast strategy also LISTS only the probed lists: it opens their
+    ``cent_id=<v>`` directories, not the index root, so per-call listing
+    is O(nprobe) directories, never O(n_lists) plus all their files (see
+    :func:`_open_probed_lists`).
 
     The probed-list collect is bounded by ``queries x nprobe`` (and
     guarded by ``max_probed_lists``) — it is the partition-pruning
@@ -986,13 +1000,16 @@ def ivf_search_partitioned(
       top-k-truncated by the same (score desc, id asc) total order — are
       collected and heap-merged driver-side, eliminating the window
       exchange: the serving path is then exactly TWO substantive Spark
-      jobs (query collect + pruned scan/score/collect) plus a local-rows
-      materialization.  Identical output by construction (same composite
-      order, same tie-break).  This is the per-query-latency shape the
-      ``ann_ivf_1q`` bench key times.
+      jobs (query collect + pruned scan/score/collect).  The returned
+      DataFrame is a ``LocalTableScan`` over the merged rows, so
+      collecting it runs no further job.  Identical output by
+      construction (same composite order, same tie-break).  This is the
+      per-query-latency shape the ``ann_ivf_1q`` bench key times.
     """
     import numpy as np
     import pandas as pd
+
+    from ..sources.parquet_index import _mask_tombstones
 
     if merge not in ("window", "driver"):
         raise ValueError(f"unknown merge {merge!r} (window|driver)")
@@ -1005,7 +1022,7 @@ def ivf_search_partitioned(
             # selectivity= from a stats table to skip this probe job
             _est_scan = spark.read.parquet(index_path)
             if live:
-                _est_scan = _mask_tombstoned(_est_scan, spark, index_path, id_col)
+                _est_scan = _mask_tombstones(spark, _est_scan, index_path, id_col)
             selectivity = estimate_selectivity(
                 _est_scan, predicate, hash_col=id_col
             )
@@ -1084,7 +1101,7 @@ def ivf_search_partitioned(
             .filter(predicate if predicate is not None else F.lit(True))
         )
         if live:
-            docs = _mask_tombstoned(docs, spark, index_path, id_col)
+            docs = _mask_tombstones(spark, docs, index_path, id_col)
         docs = docs.withColumn(
             "cent_id", F.col("cent_id").cast(cent_t)
         ).select(id_col, vec_col, "cent_id")
@@ -1144,12 +1161,12 @@ def ivf_search_partitioned(
     probed = list(cent_to_qidx)
     cent_t = dict(centroids.dtypes)["cent_id"]
     docs = (
-        spark.read.parquet(index_path)
+        _open_probed_lists(spark, index_path, probed)
         .filter(F.col("cent_id").isin(probed))
         .filter(predicate if predicate is not None else F.lit(True))
     )
     if live:
-        docs = _mask_tombstoned(docs, spark, index_path, id_col)
+        docs = _mask_tombstones(spark, docs, index_path, id_col)
     docs = docs.withColumn(
         "cent_id", F.col("cent_id").cast(cent_t)
     ).select(id_col, vec_col, "cent_id")
@@ -1214,9 +1231,13 @@ def ivf_search_partitioned(
                 heapq.nsmallest(k, per_q[qv]), start=1
             ):
                 out.append((qv, did, rank, -negs))
+        # built from a pandas frame, the merged rows become a
+        # LocalTableScan: the caller's collect() runs no Spark job (a
+        # Python row list would plan as an RDD scan and rebuild the
+        # already-merged result in a job of its own)
         return _with_eff(
             spark.createDataFrame(
-                out,
+                pd.DataFrame(out, columns=[qid_col, id_col, "rank", "score"]),
                 f"`{qid_col}` {qid_t}, `{id_col}` {id_t}, rank int, score double",
             ),
             nprobe,

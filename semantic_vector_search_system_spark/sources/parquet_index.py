@@ -243,6 +243,12 @@ def upsert_vector_index(
     * the landed-row count comes from the append's OWN metrics (a
       ``Observation`` on the written plan) — no re-read of the new
       generation;
+    * the index is opened (and its files listed) ONCE per call: the
+      superseded probe scans that same pre-append snapshot (plus the
+      tombstone mask) instead of re-opening the index.  The snapshot is
+      exactly the set of generations the new batch can supersede — its
+      own appended rows carry ``_batch = batch``, which the probe
+      excludes anyway;
     * the superseded probe prunes to the update keys' partitions when
       ``partition_by`` is set AND the caller passes
       ``stable_partitions=True``.  This flag is a CONTRACT, not a hint:
@@ -357,8 +363,10 @@ def upsert_vector_index(
         # r13 form re-ran the whole probe plan for the tombstone write
         # after counting it (two thin index scans per upsert — r14,
         # guide §1.2).  The materialized relation is churn-bounded.
+        # The probe scans ``stored`` — the pre-append snapshot opened
+        # above — instead of re-opening (and re-listing) the index.
         superseded = _superseded_probe(
-            spark, path, keys, batch, id_col, partition_by, touched
+            spark, stored, path, keys, batch, id_col, partition_by, touched
         ).localCheckpoint()
         # count() doubles as the skip-gate: zero superseded -> no
         # tombstone append at all (pure-insert batches stay one write)
@@ -372,6 +380,7 @@ def upsert_vector_index(
 
 def _superseded_probe(
     spark: SparkSession,
+    stored: DataFrame,
     path: str,
     keys: DataFrame,
     batch: int,
@@ -380,12 +389,14 @@ def _superseded_probe(
     touched: list | None,
 ) -> DataFrame:
     """The thin ``(id, _batch)`` probe for generations an update batch
-    supersedes (factored out so tests can plan-gate it).  ``touched`` is
-    the update batch's distinct partition values under the
-    ``stable_partitions`` contract — the ``isin`` filter lands in the
-    scan's PartitionFilters, so the probe reads only touched partition
-    directories instead of the whole live index."""
-    probe = read_live_index(spark, path, id_col=id_col)
+    supersedes (factored out so tests can plan-gate it).  ``stored`` is
+    the index as opened BEFORE the append: exactly the generations the
+    new batch can supersede (its own rows are excluded by ``_batch``
+    anyway).  ``touched`` is the update batch's distinct partition values
+    under the ``stable_partitions`` contract — the ``isin`` filter lands
+    in the scan's PartitionFilters, so the probe reads only touched
+    partition directories instead of the whole live index."""
+    probe = _mask_tombstones(spark, stored, path, id_col)
     if touched is not None and partition_by:
         probe = probe.filter(F.col(partition_by).isin(touched))
     return (
@@ -430,7 +441,20 @@ def read_live_index(
     read error propagates.  Serving unmasked on a transient error would
     silently resurrect deleted/superseded vectors."""
     path = _norm_path(path)
-    index = spark.read.parquet(path)
+    return _mask_tombstones(spark, spark.read.parquet(path), path, id_col)
+
+
+def _mask_tombstones(
+    spark: SparkSession, index: DataFrame, path: str, id_col: str
+) -> DataFrame:
+    """Drop superseded/deleted generations from a scan of the index at
+    ``path`` (whole or pruned): broadcast anti-join on ``(id, _batch)``
+    against the churn-sized tombstone table.  No tombstone table or no
+    ``_batch`` column -> the scan is already live.  Fail-closed like
+    :func:`read_live_index`: a tombstone table that exists but cannot be
+    read raises."""
+    if "_batch" not in index.columns:
+        return index
     tomb = read_optional_parquet(spark, _tombstones_path(path))
     if tomb is None:
         return index
@@ -439,58 +463,6 @@ def read_live_index(
         [id_col, "_batch"],
         "left_anti",
     )
-
-
-#: driver_tombstone_pairs reads the tombstone side table with pyarrow on
-#: the DRIVER only while its files total at most this many bytes — churn
-#: batches are ~10k (id, _batch) rows (a few hundred KB); anything larger
-#: falls back to the broadcast anti-join.
-_DRIVER_MASK_MAX_BYTES = 32 << 20
-
-
-def driver_tombstone_pairs(
-    path: str, id_col: str, max_bytes: int = _DRIVER_MASK_MAX_BYTES
-) -> tuple[str, frozenset | None]:
-    """Serve-path fast mask (r15; r14 VERDICT "Next #8"): read the
-    churn-sized tombstone table DRIVER-SIDE (pyarrow, no Spark job) so a
-    single-query serve over a mutated index skips the per-call tombstone
-    scan + BroadcastExchange build the JVM anti-join pays.
-
-    Returns ``(mode, pairs)``:
-
-    * ``("none", None)`` — no tombstone table exists: the index was never
-      mutated, serve unmasked (same contract as :func:`read_live_index`);
-    * ``("pairs", frozenset((id, _batch)))`` — mask these pairs row-
-      locally (e.g. inside the serving kernel);
-    * ``("fallback", None)`` — not a local path, or the table is too big
-      for a driver read: the caller must use the broadcast anti-join.
-
-    FAIL-CLOSED (the r11 ADVICE contract): only a genuinely MISSING
-    table returns "none"; any read error while the table exists
-    propagates — falling back to an unmasked serve would resurrect
-    deleted/superseded vectors."""
-    tomb = _tombstones_path(path)
-    if "://" in tomb:
-        return "fallback", None
-    if not os.path.exists(tomb):
-        return "none", None
-    total = 0
-    for root, _dirs, files in os.walk(tomb):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-    if total > max_bytes:
-        return "fallback", None
-    import pyarrow.dataset as ds
-
-    tbl = ds.dataset(tomb, format="parquet").to_table(
-        columns=[id_col, "_batch"]
-    )
-    ids = tbl.column(id_col).to_pylist()
-    batches = tbl.column("_batch").to_pylist()
-    return "pairs", frozenset(zip(ids, batches))
 
 
 def _gen_dirs(path: str) -> list[tuple[int, str]]:

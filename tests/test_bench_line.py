@@ -180,7 +180,9 @@ def test_fold_with_mirror_takes_per_key_min_and_flags_noise():
         ("2026-08-15 07:29Z", {"sf": 0.1, "queries": {"dedup": 17.226, "encode": 9.135}}),
     )
     timings = {"dedup": 16.9, "encode": 6.1, "brand_new_key": 2.0}
-    folded, info, raw, src = bench.fold_with_mirror(timings, 0.1, notes, _NOW)
+    folded, info, raw, src = bench.fold_with_mirror(
+        timings, 0.1, notes, _NOW, cpus=None
+    )
     assert folded == {"dedup": 5.982, "encode": 6.1, "brand_new_key": 2.0}
     assert info["runs"] == 2
     # dedup's this-run reading is >1.2x the folded min -> self-identified
@@ -197,7 +199,9 @@ def test_fold_with_mirror_ignores_stale_and_wrong_sf_lines():
         # future timestamp (clock skew) — never folds
         ("2026-08-16 08:00Z", {"sf": 0.1, "queries": {"dedup": 0.1}}),
     )
-    folded, info, raw, src = bench.fold_with_mirror({"dedup": 7.0}, 0.1, notes, _NOW)
+    folded, info, raw, src = bench.fold_with_mirror(
+        {"dedup": 7.0}, 0.1, notes, _NOW, cpus=None
+    )
     assert folded == {"dedup": 7.0}
     assert info is None and raw is None
 
@@ -208,7 +212,9 @@ def test_fold_with_mirror_survives_malformed_entries():
         "- not a mirror line at all\n"
         + _notes(("2026-08-15 05:00Z", {"sf": 0.1, "queries": {"q": 1.5}}))
     )
-    folded, info, raw, src = bench.fold_with_mirror({"q": 2.0}, 0.1, notes, _NOW)
+    folded, info, raw, src = bench.fold_with_mirror(
+        {"q": 2.0}, 0.1, notes, _NOW, cpus=None
+    )
     assert folded == {"q": 1.5}
     assert info["runs"] == 1
 
@@ -219,9 +225,11 @@ def test_final_emit_folds_against_recent_mirror(tmp_path, monkeypatch):
     notes_path = tmp_path / "BENCH_NOTES.md"
     stamp = datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%d %H:%MZ")
     notes_path.write_text(_notes(
-        (stamp, {"sf": 0.1, "head": "abc1234",
+        (stamp, {"sf": 0.1, "head": "abc1234", "cpus": 32,
                  "queries": {"dedup_1000000_docs": 5.982}}),
     ))
+    # the fold only borrows lines recorded at this run's core count
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     monkeypatch.setattr(bench, "OUT_PATH", str(tmp_path / "bench_out.json"))
     monkeypatch.setattr(bench, "NOTES_PATH", str(notes_path))
     monkeypatch.setattr(bench, "FLOORS", {})
@@ -262,7 +270,7 @@ def test_fold_skips_lines_from_other_commits(tmp_path, monkeypatch):
                                "queries": {"q": 4.0}}),
     )
     folded, info, raw, src = bench.fold_with_mirror(
-        {"q": 5.0}, 0.1, notes, _NOW, head="new0002"
+        {"q": 5.0}, 0.1, notes, _NOW, head="new0002", cpus=None
     )
     assert folded == {"q": 4.0}  # NOT the other-commit 1.0
     assert info["runs"] == 1
@@ -270,7 +278,7 @@ def test_fold_skips_lines_from_other_commits(tmp_path, monkeypatch):
     assert src == {"q": "2026-08-15 11:00Z@new0002"}
     # head=None (git unavailable) keeps the legacy fold-across-all behavior
     folded2, info2, _, src2 = bench.fold_with_mirror(
-        {"q": 5.0}, 0.1, notes, _NOW, head=None
+        {"q": 5.0}, 0.1, notes, _NOW, head=None, cpus=None
     )
     assert folded2 == {"q": 1.0}
     assert info2["runs"] == 3
@@ -424,7 +432,9 @@ def test_fold_noisy_map_caps_at_top_offenders():
     notes = _notes(("2026-08-15 11:00Z", {"sf": 0.1, "queries": mirror_q}))
     # this-run readings: k00 worst (x10), descending to k09 (x1.3)
     timings = {f"k{i:02d}": 10.0 - 0.967 * i for i in range(10)}
-    folded, info, raw, src = bench.fold_with_mirror(timings, 0.1, notes, _NOW)
+    folded, info, raw, src = bench.fold_with_mirror(
+        timings, 0.1, notes, _NOW, cpus=None
+    )
     assert all(folded[k] == 1.0 for k in mirror_q)
     assert info["noisy_n"] == 10
     assert len(info["noisy"]) == bench.NOISY_TOP
@@ -475,12 +485,12 @@ def test_fold_dirty_tree_never_borrows_minima():
                                "queries": {"q": 0.5}}),
     )
     folded, info, raw, src = bench.fold_with_mirror(
-        {"q": 5.0}, 0.1, notes, _NOW, head="new0002-dirty"
+        {"q": 5.0}, 0.1, notes, _NOW, head="new0002-dirty", cpus=None
     )
     assert folded == {"q": 5.0}  # borrowed nothing
     assert info is None or info.get("runs", 0) == 0
     # and a clean run ignores mirrored dirty lines
     folded2, _, _, _ = bench.fold_with_mirror(
-        {"q": 5.0}, 0.1, notes, _NOW, head="new0002"
+        {"q": 5.0}, 0.1, notes, _NOW, head="new0002", cpus=None
     )
     assert folded2 == {"q": 1.0}  # the clean line, never the dirty 0.5

@@ -51,7 +51,9 @@ ALLOWED: dict[str, dict[str, int]] = {
         # r14: ONE collect doubles as the size gate (len-checked against
         # max_model_rows immediately after) — the separate count() job
         # the r13 form paid per serving call is gone
-        "c2_rows = cnt2.collect()": 1,
+        # r15: limit(max_model_rows + 1) bounds the collect itself — an
+        # oversized model ships at most one row past the gate, not all
+        "c2_rows = cnt2.limit(max_model_rows + 1).collect()": 1,
         'c1 = {r["w1"]: int(r["c1"]) for r in cnt1.collect()}': 1,
         'vs = int(vocab.collect()[0]["vs"])': 1,
     },

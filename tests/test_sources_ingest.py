@@ -1133,7 +1133,8 @@ def test_upsert_superseded_probe_prunes_to_touched_partitions(
     # plan gate on the exact probe relation the upsert builds
     keys = F.broadcast(upd.select("docid").distinct())
     probe = _superseded_probe(
-        spark, path, keys, 2, "docid", "category", ["news"]
+        spark, spark.read.parquet(path), path, keys, 2, "docid", "category",
+        ["news"],
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
     pf_line = next(
