@@ -1291,13 +1291,14 @@ def main() -> None:
                 F.substring("docid", 2, 18).cast("long") < 1024
             ).select(F.col("docid").alias("cent_id"), F.col("vec").alias("cvec"))
             # r14: assign="inline" (scalar-UDF struct on the carried row)
-            # replaces "fast_join" — parity-tested row-identical
+            # replaced the skinny-assign + JVM vec-join transport —
+            # parity-tested against the oracle form
             # (tests/test_dedup_textanalysis.py::
             # test_semdedup_inline_strategy_parity_and_single_exchange);
-            # interleaved 1M A/B under load: fast_join {113, 81, 31} s vs
-            # inline {37, 17, 17} s — the vec column no longer re-encodes
-            # out of Python (fast's tax) NOR shuffles twice through the
-            # id rejoin (fast_join's tax); ONE Exchange total.
+            # interleaved 1M A/B under load: vec-join {113, 81, 31} s vs
+            # inline {37, 17, 17} s — the vec column neither re-encodes
+            # out of Python NOR shuffles twice through an id rejoin;
+            # ONE Exchange total.
             sd_plan = semdedup(
                 dvec, sd_cents, threshold=0.99, keep="far",
                 id_col="docid", vec_col="vec", assign="inline",
@@ -1314,7 +1315,7 @@ def main() -> None:
                 "timed_region": "scalar-UDF struct assign on the carried "
                 "row (one Arrow crossing IN, thin struct back) -> ONE "
                 "cent_id shuffle -> per-cluster tiled triangular-max "
-                "prune (r14; was fast_join: skinny assign + JVM vec join)",
+                "prune (r14; was a skinny assign + JVM vec join)",
             }
             emit(timings, query_meta, sf, partial=True)
             rq.unpersist()

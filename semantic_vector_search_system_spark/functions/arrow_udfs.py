@@ -69,19 +69,21 @@ def lm_score_udf(bc):
     return score
 
 
-def nearest_centroid_udf(cent_type: str, bc, topn_sel):
+def nearest_centroid_udf(cent_type: str, bc):
     """Scalar pandas UDF assigning each vector its nearest centroid id.
 
     ``bc`` is a broadcast of ``(cent_ids, normalized_centroid_matrix)``;
-    ``topn_sel`` is the shared tie-breaking kernel
-    (``operators.similarity._topn_list_sel``) so this form can never
-    drift from ``ivf_assign_fast``.  The vector column crosses into
-    Python once, only the thin ``cent_id`` column crosses back, and the
-    carrying row never leaves the JVM plan — see
+    normalization and tie-break are the shared kernels of
+    ``functions.vectors`` (``normalize_rows``, ``topn_sel``), so this form
+    can never drift from ``ivf_assign_fast``.  The vector column crosses
+    into Python once, only the thin ``cent_id`` column crosses back, and
+    the carrying row never leaves the JVM plan — see
     ``operators.similarity.ivf_assign_inline`` for the measured
     data-motion rationale.
     """
     import numpy as np
+
+    from .vectors import normalize_rows, topn_sel
 
     @pandas_udf(cent_type)
     def assign(vecs: pd.Series) -> pd.Series:
@@ -91,10 +93,7 @@ def nearest_centroid_udf(cent_type: str, bc, topn_sel):
         # stack, not tolist(): Arrow hands list cells back as ndarrays —
         # stack is a per-row memcpy (r14, guide §4.2)
         D = np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
-        dn = np.linalg.norm(D, axis=1, keepdims=True)
-        Dn = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
-        S = Dn @ Cm.T
-        sel = topn_sel(S, all_cids, 1)[:, 0]
+        sel = topn_sel(normalize_rows(D) @ Cm.T, all_cids, 1)[:, 0]
         return pd.Series(all_cids[sel])
 
     return assign
@@ -106,16 +105,17 @@ def nearest_centroid_sim_udf(cent_type: str, bc, f32: bool):
     :func:`nearest_centroid_udf` (r14).
 
     ``bc`` is a broadcast of ``(cent_ids, normalized_centroid_matrix)``
-    (float32 matrix when ``f32``).  Arithmetic and tie-break mirror
-    ``operators.similarity.semdedup_assign_fast`` exactly: batch
-    normalize in the scoring dtype, one matmul against the
-    cent_id-ascending centroid matrix, ``argmax`` first-max rule = the
-    ascending-cent_id tie-break, None cells score as zero vectors.  The
-    vector column crosses into Python once, only the thin (cent_id,
+    (float32 matrix when ``f32``).  Batch normalize in the scoring dtype
+    (``functions.vectors.normalize_rows``), one matmul against the
+    cent_id-ascending centroid matrix, ties to the smaller cent_id
+    (``functions.vectors.topn_sel``), None cells score as zero vectors.
+    The vector column crosses into Python once, only the thin (cent_id,
     cent_sim) struct crosses back, and the carrying row never leaves the
     JVM plan — the ``ivf_assign_inline`` minimum-data-motion shape
     applied to the assignment that SemDeDup's keep-order needs."""
     import numpy as np
+
+    from .vectors import normalize_rows, topn_sel
 
     @pandas_udf(f"struct<cent_id:{cent_type}, cent_sim:double>")
     def assign(vecs: pd.Series) -> pd.DataFrame:
@@ -135,10 +135,8 @@ def nearest_centroid_sim_udf(cent_type: str, bc, f32: bool):
             # Arrow hands list<float> cells back as ndarrays; stack is a
             # per-row memcpy, no python-level upcast loop
             D = np.stack(vecs.to_numpy()).astype(want, copy=False)
-        dn = np.linalg.norm(D, axis=1, keepdims=True)
-        Dn = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
-        S = Dn @ Cm_o.T
-        best = np.argmax(S, axis=1)
+        S = normalize_rows(D) @ Cm_o.T
+        best = topn_sel(S, cids_o, 1)[:, 0]
         return pd.DataFrame(
             {
                 "cent_id": cids_o[best],

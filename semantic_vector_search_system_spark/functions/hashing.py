@@ -64,11 +64,3 @@ def double_hash_family(col: Column | str, num_hashes: int) -> list[Column]:
     h2 = F.conv(F.substring(d, 16, 10), 16, 10).cast("long")
     mod = F.lit(1 << HASH_BITS)
     return [F.pmod(h1 + F.lit(i) * h2, mod) for i in range(num_hashes)]
-
-
-def double_hash_sql(expr: str, i: str) -> str:
-    """DuckDB fragment matching :func:`double_hash_family` for seed column
-    expression ``i`` (bigint)."""
-    h1 = f"CAST(CAST(CONCAT('0x', substr(md5({expr}), 1, 15)) AS UBIGINT) AS BIGINT)"
-    h2 = f"CAST(CAST(CONCAT('0x', substr(md5({expr}), 16, 10)) AS UBIGINT) AS BIGINT)"
-    return f"(({h1} + ({i}) * {h2}) % {1 << HASH_BITS})"

@@ -73,11 +73,6 @@ def char_ngrams(col: Column | str, n: int = 4) -> Column:
     return F.transform(F.sequence(F.lit(1), n_gr), lambda i: F.substring(c, i, n))
 
 
-def sanitize_model_name(col: Column | str) -> Column:
-    """``model.replace('/', '_')`` (reference `run_experiments.py:113`)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, "/", "_")
-
 def normalize_text(col: Column | str) -> Column:
     """C4-style ASCII text normalization for dedup keys: lowercase,
     punctuation -> space, whitespace runs collapsed, trimmed. Case and

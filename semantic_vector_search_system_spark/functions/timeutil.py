@@ -45,11 +45,6 @@ def epoch_us(col: str = "ts") -> Column:
     return F.expr(f"timestampdiff(MICROSECOND, {EPOCH_NTZ}, {col})")
 
 
-def epoch_s(col: str = "ts") -> Column:
-    """Epoch seconds (floor) of an NTZ column, session-independent."""
-    return F.expr(f"timestampdiff(SECOND, {EPOCH_NTZ}, {col})")
-
-
 def hour_epoch_s(col: str = "ts") -> Column:
     """Epoch seconds of the containing hour boundary of an NTZ column —
     ``date_trunc`` on NTZ is pure wall-clock truncation, so the result is

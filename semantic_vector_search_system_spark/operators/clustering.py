@@ -93,8 +93,8 @@ def _assign_fast(e: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFram
     Output is SKINNY ``(vec_id, cent_id, adist)`` — the vector column is
     NOT passed through (the semdedup transport finding: Arrow re-encode
     of the vec column OUT of Python dominates a fused carry); callers
-    that need the vectors join back on vec_id (the measured "fast_join"
-    winner)."""
+    that need the vectors join back on vec_id (the measured r7b winner
+    over that carry)."""
     import numpy as np
     import pandas as pd
 

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import stable_hash64
 from ..functions.quantize import quantize
 from ..functions.text import py_tokenize, tokenize
-from ..functions.vectors import l2_normalize
+from ..functions.vectors import l2_normalize, normalize_rows
 
 
 class HashingEncoder:
@@ -474,11 +474,7 @@ def numpy_mini_transformer_loader(
             X = self._ln(X + np.maximum(X @ self.W1, 0.0) @ self.W2)
             m = mask[:, :, None]
             pooled = (X * m).sum(axis=1) / np.maximum(m.sum(axis=1), 1e-9)
-            nrm = np.linalg.norm(pooled, axis=1, keepdims=True)
-            pooled = np.divide(
-                pooled, nrm, out=np.zeros_like(pooled), where=nrm > 0
-            )
-            return pooled.astype(np.float32)
+            return normalize_rows(pooled).astype(np.float32)
 
     return _MiniTransformer()
 

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.quantize import quantize
+from ..functions.vectors import normalize_rows, topn_sel
 
 
 def _sq_l2_expr(vec: Column, cvec: Column, offset: Column, d: int) -> Column:
@@ -322,9 +323,7 @@ def pq_adc_topk_fast(
             # resolution: per-partition selection must break ties by docid
             # or the k-boundary pick diverges from the (adist, docid)
             # global order the merge window and the oracle use
-            sel = np.empty((len(qids), top), dtype=np.int64)
-            for qi in range(len(qids)):
-                sel[qi] = np.lexsort((ids, A[qi]))[:top]
+            sel = topn_sel(-A, ids, top)  # (adist, docid) ascending
             rows = {
                 "qid": np.repeat(qids, top),
                 "docid": ids[sel].ravel(),
@@ -460,11 +459,6 @@ def ivfpq_topk_expr(
     )
 
 
-def _normalize_rows(M: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(M, axis=1, keepdims=True)
-    return np.divide(M, n, out=np.zeros_like(M), where=n > 0)
-
-
 def ivfpq_train(
     emb: DataFrame,
     cent_ids: np.ndarray,
@@ -489,11 +483,10 @@ def ivfpq_train(
             fraction=min(1.0, 1.15 * sample_rows / n), seed=seed
         ).limit(sample_rows)
     X = np.asarray([r[0] for r in sampled.collect()], dtype=np.float64)
-    Cn = _normalize_rows(C)
-    S = _normalize_rows(X) @ Cn.T
-    # stable tie-break to the smaller cent_id: argsort by cent_id first
-    order = np.argsort(cent_ids, kind="stable")
-    pick = order[np.argmax(S[:, order], axis=1)]
+    Cn = normalize_rows(C)
+    S = normalize_rows(X) @ Cn.T
+    # stable tie-break to the smaller cent_id
+    pick = topn_sel(S, np.asarray(cent_ids), 1)[:, 0]
     R = X - C[pick]
     return _kmeans_codebooks(R, m, k_codes, seed=seed, max_iter=max_iter)
 
@@ -517,8 +510,7 @@ def ivfpq_encode(
     books = codebooks
     cid_arr = np.asarray(cent_ids)
     Cm = np.asarray(C, dtype=np.float64)
-    Cn = _normalize_rows(Cm)
-    order = np.argsort(cid_arr, kind="stable")
+    Cn = normalize_rows(Cm)
     id_type = dict(emb.dtypes)[id_col]
 
     def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -530,8 +522,8 @@ def ivfpq_encode(
             X = np.stack(pdf[vec_col].to_numpy()).astype(
                 np.float64, copy=False
             )
-            S = _normalize_rows(X) @ Cn.T
-            pick = order[np.argmax(S[:, order], axis=1)]
+            S = normalize_rows(X) @ Cn.T
+            pick = topn_sel(S, cid_arr, 1)[:, 0]
             R = X - Cm[pick]
             codes = np.empty((len(X), m), dtype=np.int32)
             for j in range(m):
@@ -578,15 +570,13 @@ def ivfpq_topk(
     Q = np.asarray(q_vecs, dtype=np.float64)
     cid_arr = np.asarray(cent_ids)
     Cm = np.asarray(C, dtype=np.float64)
-    Cn = _normalize_rows(Cm)
-    order = np.argsort(cid_arr, kind="stable")
+    Cn = normalize_rows(Cm)
     nprobe = min(nprobe, len(cid_arr))
-    S = _normalize_rows(Q) @ Cn.T
     # per query: nprobe best lists, ties to smaller cent_id
+    sels = topn_sel(normalize_rows(Q) @ Cn.T, cid_arr, nprobe)
     probes = {}
     luts = {}  # (query_index, cent_id) -> (m, k_codes) LUT
-    for qi in range(len(Q)):
-        srt = order[np.argsort(-S[qi, order], kind="stable")[:nprobe]]
+    for qi, srt in enumerate(sels):
         probes[qi] = cid_arr[srt]
         for ci in srt:
             r = Q[qi] - Cm[ci]
@@ -619,7 +609,7 @@ def ivfpq_topk(
                     lut = luts[(qi, int(cent))]
                     A = lut[np.arange(Cc.shape[1])[None, :], Cc].sum(axis=1)
                     top = min(k, len(A))
-                    sel = np.lexsort((ids, A))[:top]
+                    sel = topn_sel(-A[None, :], ids, top)[0]  # (adist, id) asc
                     out_q.append(np.repeat(qids[qi], top))
                     out_d.append(ids[sel])
                     out_a.append(A[sel])

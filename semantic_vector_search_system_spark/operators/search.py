@@ -34,7 +34,12 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity, dot_product
+from ..functions.vectors import (
+    cosine_similarity,
+    dot_product,
+    normalize_rows,
+    topn_sel,
+)
 
 #: The Scala bounded-heap top-k Aggregator (source: jvm/src/TopKAggregator.scala,
 #: rebuild with scripts/build_topk_jar.sh).
@@ -241,15 +246,14 @@ def collect_query_matrix(
     qids = [r[0] for r in qrows]
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
     if metric == "cosine" and len(qrows):
-        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-        qmat = np.divide(qmat, qn, out=np.zeros_like(qmat), where=qn > 0)
+        qmat = normalize_rows(qmat)
     return qids, qmat
 
 
 def _threaded_matmul(D, Q):
     """Chunked ``D @ Q.T`` across a thread pool — BLAS is pinned to one
-    thread per task (session.py), so single-task search modes (fused,
-    broadcast_index) re-parallelize the one big matmul explicitly. GIL is
+    thread per task (session.py), so the single-task ``broadcast_index``
+    search mode re-parallelizes its one big matmul explicitly. GIL is
     released inside dgemm; chunking rows does not change each row's dot."""
     import os as _os
     from concurrent.futures import ThreadPoolExecutor
@@ -296,23 +300,16 @@ def topk_bruteforce(
        ``ranker='window'`` (row_number) or ``ranker='heap'`` (the JVM
        bounded-heap Aggregator, :func:`rank_topk_heap`).
 
-    ``mode='fused'`` is the small-corpus fast path: the doc side is
-    coalesced into ONE task that scores every batch, merges, and emits
-    final ``(qid, id, rank, score)`` rows directly — one narrow stage, no
-    shuffle, no window. Single-node latency for corpora that fit one
-    worker's memory (the reference's own regime: its memmap search is a
-    single process); keep the default distributed mode beyond ~100k docs
-    or the lost scan/score parallelism outweighs the saved stage.
-
     ``score_dtype='float32'`` scores in single precision — exact parity
     with the reference, whose memmap index is float32 and whose
     ``mat.dot(q)`` therefore runs in float32 (`auto_run_tests.py:123-138`).
-    The stored ``array<float>`` column then reshapes zero-copy into the
-    scoring matrix (no 2x-width convert-and-copy) and the matmul itself is
+    The stored ``array<float>`` column then stacks into the scoring
+    matrix with no 2x-width convert-and-copy, and the matmul itself is
     ~2x cheaper. The float64 default is kept for every oracle-checked path
     so scores stay bit-comparable with DuckDB's double arithmetic.
 
-    ``mode='broadcast_index'`` is the serving shape for indexes that fit in
+    ``mode`` is ``'distributed'`` (the shape above) or
+    ``'broadcast_index'``, the serving shape for indexes that fit in
     executor memory: the doc matrix is collected ONCE
     (:func:`collect_doc_matrix` — the analog of the reference loading its
     memmap index before the query loop, `auto_run_tests.py:119-127`),
@@ -321,11 +318,17 @@ def topk_bruteforce(
     Arrow transfer — matching how the reference (and any vector-serving
     system) amortizes index load across queries. Guarded by
     ``collect_doc_matrix``'s row cap; large corpora use the distributed
-    scan modes.
+    scan mode.
     """
     import numpy as np
     import pandas as pd
 
+    if mode not in ("distributed", "broadcast_index"):
+        raise ValueError(
+            f"topk_bruteforce: unknown mode {mode!r} (distributed|broadcast_index)"
+        )
+    if ranker not in ("window", "heap"):
+        raise ValueError(f"topk_bruteforce: unknown ranker {ranker!r} (window|heap)")
     np_dt = {"float64": np.float64, "float32": np.float32}[score_dtype]
     doc_side = docs.filter(predicate) if predicate is not None else docs
     qids, qmat = (
@@ -355,8 +358,7 @@ def topk_bruteforce(
         # per-row memcpy, no python-level element loop (r14, guide §4.2)
         D = np.stack(pdf[vec_col].to_numpy()).astype(np_dt, copy=False)
         if use_cosine:
-            dn = np.linalg.norm(D, axis=1, keepdims=True)
-            D = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
+            D = normalize_rows(D)
         return D @ bq.value[1].T  # (n_docs_batch, n_q)
 
     def _partial_sel(col: "np.ndarray", kk: int) -> "np.ndarray":
@@ -421,8 +423,7 @@ def topk_bruteforce(
             ids_a, D = bd.value
             D = D.astype(np_dt, copy=False)
             if use_cosine:
-                dn = np.linalg.norm(D, axis=1, keepdims=True)
-                D = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
+                D = normalize_rows(D)
             for _ in batches:  # consume the one dummy input row
                 pass
             if D.shape[0] == 0:
@@ -434,8 +435,7 @@ def topk_bruteforce(
                 col = S[:, j]
                 sel = _partial_sel(col, kk)
                 # (score desc, id asc) exactly like the window ranker
-                sec = np.argsort(ids_a[sel], kind="stable")
-                order = sel[sec][np.argsort(-col[sel][sec], kind="stable")][:kk]
+                order = sel[topn_sel(col[sel][None, :], ids_a[sel], kk)[0]]
                 out[qid_col].append(np.repeat(q_ids[j], len(order)))
                 out[id_col].append(ids_a[order])
                 out["rank"].append(np.arange(1, len(order) + 1, dtype=np.int32))
@@ -448,73 +448,6 @@ def topk_bruteforce(
             search_broadcast, schema=ranked_schema
         )
 
-    if mode == "fused":
-        ranked_schema = (
-            f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, rank int, score double"
-        )
-
-        def _batch_matrix(col) -> "np.ndarray":
-            """(n, dim) scoring matrix from an Arrow list<float> column —
-            zero-copy reshape when the layout allows (and, for float32
-            scoring of a float32 column, no convert-and-copy at all), else
-            the stacking fallback."""
-            import pyarrow as pa
-
-            if isinstance(col, (pa.ListArray, pa.LargeListArray)) and col.null_count == 0:
-                flat = col.flatten()
-                vals = flat.to_numpy(zero_copy_only=False)
-                n = len(col)
-                if n and len(vals) % n == 0:
-                    return vals.reshape(n, -1).astype(np_dt, copy=False)
-            return np.array(col.to_pylist(), dtype=np_dt)
-
-        def rank_single_pass(batches) -> Iterator["pa.RecordBatch"]:
-            import pyarrow as pa
-
-            q_ids, Q = bq.value
-            nq = len(q_ids)
-            cand_ids: list[list] = [[] for _ in range(nq)]
-            cand_sc: list[list] = [[] for _ in range(nq)]
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                D = _batch_matrix(rb.column(1))
-                if use_cosine:
-                    dn = np.linalg.norm(D, axis=1, keepdims=True)
-                    D = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
-                S = _threaded_matmul(D, Q)
-                kk = min(k, S.shape[0])
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                for j in range(nq):
-                    sel = _partial_sel(S[:, j], kk)
-                    cand_ids[j].append(ids[sel])
-                    cand_sc[j].append(S[sel, j])
-            out = {qid_col: [], id_col: [], "rank": [], "score": []}
-            for j in range(nq):
-                if not cand_ids[j]:
-                    continue
-                ids_j = np.concatenate(cand_ids[j])
-                sc_j = np.concatenate(cand_sc[j])
-                # (score desc, id asc): stable argsort by id, then stable
-                # argsort by -score — works for numeric AND object (string)
-                # id arrays, unlike lexsort
-                sec = np.argsort(ids_j, kind="stable")
-                order = sec[np.argsort(-sc_j[sec], kind="stable")][: min(k, len(ids_j))]
-                out[qid_col].append(np.repeat(q_ids[j], len(order)))
-                out[id_col].append(ids_j[order])
-                out["rank"].append(np.arange(1, len(order) + 1, dtype=np.int32))
-                out["score"].append(sc_j[order].astype(np.float64, copy=False))
-            if out[qid_col]:
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
-                )
-
-        return (
-            doc_side.select(id_col, vec_col)
-            .coalesce(1)
-            .mapInArrow(rank_single_pass, schema=ranked_schema)
-        )
-
     partial = doc_side.select(id_col, vec_col).mapInPandas(score_batches, schema=out_schema)
-    rank = rank_topk_heap if ranker == "heap" else _rank_topk
+    rank = {"window": _rank_topk, "heap": rank_topk_heap}[ranker]
     return rank(partial, k, qid_col, id_col).select(qid_col, id_col, "rank", "score")

@@ -22,7 +22,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import stable_hash64
-from ..functions.vectors import dot_product, l2_norm
+from ..functions.vectors import (
+    dot_product,
+    l2_norm,
+    normalize_rows,
+    topn_sel,
+    unit_rows,
+)
 
 
 def cosine_self_join(
@@ -58,11 +64,7 @@ def cosine_self_join(
         return emb.sparkSession.createDataFrame(
             [], f"id_a {id_t}, id_b {id_t}, cosine double"
         )
-    ids = np.array([r[0] for r in rows])
-    M = np.array([r[1] for r in rows], dtype=np.float64)
-    nrm = np.linalg.norm(M, axis=1, keepdims=True)
-    Mn = np.divide(M, nrm, out=np.zeros_like(M), where=nrm > 0)
-    bc = emb.sparkSession.sparkContext.broadcast((ids, Mn))
+    bc = emb.sparkSession.sparkContext.broadcast(unit_rows(rows))
 
     id_type = dict(emb.dtypes)[id_col]
     schema = f"id_a {id_type}, id_b {id_type}, cosine double"
@@ -72,9 +74,7 @@ def cosine_self_join(
         for pdf in batches:
             if pdf.empty:
                 continue
-            D = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            dn = np.linalg.norm(D, axis=1, keepdims=True)
-            Dn = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
+            Dn = normalize_rows(np.array(pdf[vec_col].tolist(), dtype=np.float64))
             S = Dn @ allM.T  # (batch, n_all)
             bids = pdf[id_col].to_numpy()
             ii, jj = np.nonzero((S >= threshold) & (bids[:, None] < all_ids[None, :]))
@@ -603,21 +603,12 @@ def ivf_assign_fast(
     import numpy as np
     import pandas as pd
 
-    crows = centroids.select(cent_id_col, cent_vec_col).collect()
-    if not crows:
-        # an IVF with zero lists has no meaningful assignment — name the
-        # failure instead of surfacing a numpy shape error from the kernel
-        raise ValueError("ivf_assign_fast: centroids relation is empty")
-    cids = np.array([r[0] for r in crows])
-    C = np.array([r[1] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = np.divide(C, cn, out=np.zeros_like(C), where=cn > 0)
-    bc = emb.sparkSession.sparkContext.broadcast((cids, Cn))
-
+    bc = _broadcast_centroids(
+        centroids, cent_id_col, cent_vec_col, "ivf_assign_fast"
+    )
     id_t = dict(emb.dtypes)[id_col]
     cent_t = dict(centroids.dtypes)[cent_id_col]
     schema = f"`{id_col}` {id_t}, `{cent_id_col}` {cent_t}, cent_rank int"
-    np_ = min(nprobe, len(crows))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_cids, Cm = bc.value
@@ -629,11 +620,9 @@ def ivf_assign_fast(
             D = np.stack(pdf[vec_col].to_numpy()).astype(
                 np.float64, copy=False
             )
-            dn = np.linalg.norm(D, axis=1, keepdims=True)
-            Dn = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
-            S = Dn @ Cm.T  # (batch, n_centroids)
+            S = normalize_rows(D) @ Cm.T  # (batch, n_centroids)
             ids = pdf[id_col].to_numpy()
-            sel = _topn_list_sel(S, all_cids, np_)  # (batch, np_)
+            sel = topn_sel(S, all_cids, nprobe)  # (batch, <= nprobe)
             m = sel.shape[1]
             # row-major flatten == the old per-row concatenation order
             yield pd.DataFrame(
@@ -674,53 +663,42 @@ def ivf_assign_inline(
     only the thin int column crosses back, the rest of the row never
     leaves the JVM plan, and there is no Exchange at all.  Tie-breaking
     and arithmetic are shared with :func:`ivf_assign_fast`
-    (``_topn_list_sel``), so the two forms can never drift."""
-    import numpy as np
-
+    (``functions.vectors.topn_sel``), so the two forms can never drift."""
     from ..functions.arrow_udfs import nearest_centroid_udf
 
-    crows = centroids.select(cent_id_col, cent_vec_col).collect()
-    if not crows:
-        raise ValueError("ivf_assign_inline: centroids relation is empty")
-    cids = np.array([r[0] for r in crows])
-    C = np.array([r[1] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = np.divide(C, cn, out=np.zeros_like(C), where=cn > 0)
-    bc = emb.sparkSession.sparkContext.broadcast((cids, Cn))
-
+    bc = _broadcast_centroids(
+        centroids, cent_id_col, cent_vec_col, "ivf_assign_inline"
+    )
     cent_type = centroids.schema[cent_id_col].dataType.simpleString()
     # the UDF is built in functions/arrow_udfs.py — a module WITHOUT
     # `from __future__ import annotations`, so pandas_udf can infer the
     # eval type from real pd.Series hints instead of the deprecated
     # PandasUDFType.SCALAR enum (SPARK-28264; r13 VERDICT #5)
-    assign = nearest_centroid_udf(cent_type, bc, _topn_list_sel)
+    assign = nearest_centroid_udf(cent_type, bc)
     return emb.withColumn(cent_id_col, assign(F.col(vec_col)))
 
 
-def _topn_list_sel(S, all_cids, n: int):
-    """Per-row indices of the ``n`` best lists by (sim desc, cent_id asc)
-    as an ``(rows, n)`` array — stable argsort by cent_id then stable
-    argsort by -sim, exact parity with :func:`ivf_assign`'s window
-    ordering.  Shared by the distributed assignment kernel and the
-    driver-side assignment of :func:`ivf_search_partitioned`'s broadcast
-    strategy, so the two can never drift.
-
-    r14 (guide §4.2 — vectorize inside the kernel): the per-row Python
-    loop + per-row argsort made the retrain's 1M-row assignment stage
-    interpreter-bound.  ``n == 1`` is one ``argmax`` over the
-    cent_id-ascending columns (first-max rule IS the ascending-cent_id
-    tie-break); ``n > 1`` is one batched stable argsort.  Ordering
-    semantics are bit-identical to the old per-row form (same stable
-    argsort of the same negated row)."""
+def _broadcast_centroids(
+    centroids: DataFrame,
+    cent_id_col: str,
+    cent_vec_col: str,
+    caller: str,
+    f32: bool = False,
+):
+    """Collect the tiny centroid relation once and broadcast it as
+    ``(cent_ids, unit matrix)`` (float32 matrix when ``f32``) for the BLAS
+    assignment kernels.  An index with zero lists has no meaningful
+    assignment: an empty relation raises, naming ``caller``, instead of
+    surfacing a numpy shape error from the kernel."""
     import numpy as np
 
-    cent_order = np.argsort(all_cids, kind="stable")
-    So = S[:, cent_order]
-    if n == 1:
-        best = np.argmax(So, axis=1)
-        return cent_order[best][:, None]
-    idx = np.argsort(-So, axis=1, kind="stable")[:, :n]
-    return cent_order[idx]
+    crows = centroids.select(cent_id_col, cent_vec_col).collect()
+    if not crows:
+        raise ValueError(f"{caller}: centroids relation is empty")
+    cids, Cn = unit_rows(crows)
+    return centroids.sparkSession.sparkContext.broadcast(
+        (cids, Cn.astype(np.float32) if f32 else Cn)
+    )
 
 
 def ivf_topk_fast(
@@ -829,29 +807,16 @@ def _cogroup_list_topk(
     def score_list(key, qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
         if qpdf.empty or dpdf.empty:
             return pd.DataFrame({qid_col: [], id_col: [], "score": []})
-        Q = np.array(qpdf[qvec_col].tolist(), dtype=np.float64)
-        D = np.array(dpdf[vec_col].tolist(), dtype=np.float64)
-        qn = np.linalg.norm(Q, axis=1, keepdims=True)
-        dn = np.linalg.norm(D, axis=1, keepdims=True)
-        Qn = np.divide(Q, qn, out=np.zeros_like(Q), where=qn > 0)
-        Dn = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
-        S = Qn @ Dn.T  # (n_q_probing, n_docs_in_list)
-        kk = min(k, S.shape[1])
-        qids = qpdf[qid_col].to_numpy()
+        Q = normalize_rows(np.array(qpdf[qvec_col].tolist(), dtype=np.float64))
+        D = normalize_rows(np.array(dpdf[vec_col].tolist(), dtype=np.float64))
+        S = Q @ D.T  # (n_q_probing, n_docs_in_list)
         dids = dpdf[id_col].to_numpy()
-        did_order = np.argsort(dids, kind="stable")
-        out_q, out_d, out_s = [], [], []
-        for i in range(S.shape[0]):
-            row = S[i, did_order]
-            sel = did_order[np.argsort(-row, kind="stable")[:kk]]
-            out_q.append(np.repeat(qids[i], len(sel)))
-            out_d.append(dids[sel])
-            out_s.append(S[i, sel])
+        sel = topn_sel(S, dids, k)  # (n_q_probing, min(k, n_docs))
         return pd.DataFrame(
             {
-                qid_col: np.concatenate(out_q),
-                id_col: np.concatenate(out_d),
-                "score": np.concatenate(out_s),
+                qid_col: np.repeat(qpdf[qid_col].to_numpy(), sel.shape[1]),
+                id_col: dids[sel].ravel(),
+                "score": np.take_along_axis(S, sel, axis=1).ravel(),
             }
         )
 
@@ -1013,6 +978,8 @@ def ivf_search_partitioned(
 
     if merge not in ("window", "driver"):
         raise ValueError(f"unknown merge {merge!r} (window|driver)")
+    if strategy not in ("auto", "broadcast", "cogroup"):
+        raise ValueError(f"unknown strategy {strategy!r} (auto|broadcast|cogroup)")
     if predicate is not None:
         # selectivity-aware probe widening (effective_nprobe contract):
         # a filter of selectivity s thins each pruned list ~s, so the
@@ -1072,8 +1039,6 @@ def ivf_search_partitioned(
                 "ivf_search_partitioned: strategy='broadcast' with more than "
                 f"{max_broadcast_queries} queries — use strategy='cogroup'"
             )
-    elif strategy != "cogroup":
-        raise ValueError(f"unknown strategy {strategy!r} (auto|broadcast|cogroup)")
 
     if strategy == "cogroup":
         q_lists = ivf_assign_fast(
@@ -1137,19 +1102,13 @@ def ivf_search_partitioned(
             ),
             nprobe,
         )
-    cids = np.array([r[0] for r in crows])
-    C = np.array([r[1] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = np.divide(C, cn, out=np.zeros_like(C), where=cn > 0)
-    qids = np.array([r[0] for r in qrows])
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = np.divide(Q, qn, out=np.zeros_like(Q), where=qn > 0)
+    cids, Cn = unit_rows(crows)
+    qids, Qn = unit_rows(qrows)
 
     # driver-side assignment — same arithmetic and tie-break as the
-    # distributed kernel (shared _topn_list_sel), on a queries x centroids
+    # distributed kernel (shared topn_sel), on a queries x centroids
     # matrix that is tiny by the max_broadcast_queries bound
-    sels = _topn_list_sel(Qn @ Cn.T, cids, min(nprobe, len(cids)))
+    sels = topn_sel(Qn @ Cn.T, cids, nprobe)
     cent_to_qidx: dict = {}
     for qi, sel in enumerate(sels):
         for cval in cids[sel]:
@@ -1185,23 +1144,19 @@ def ivf_search_partitioned(
                 qidx = cmap.get(key)
                 if not qidx:
                     continue
-                D = np.array(grp[vec_col].tolist(), dtype=np.float64)
-                dn = np.linalg.norm(D, axis=1, keepdims=True)
-                Dn = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
+                Dn = normalize_rows(
+                    np.array(grp[vec_col].tolist(), dtype=np.float64)
+                )
                 S = Qm[qidx] @ Dn.T  # (n_q_probing_this_list, n_docs_batch)
                 dids = grp[id_col].to_numpy()
-                kk = min(k, S.shape[1])
                 # per-(query, batch) partial top-k by the TOTAL composite
                 # order (score desc, docid asc) — same selection as the
                 # cogroup kernel, and total ordering means no tie extension
                 # is needed for the window merge to agree
-                did_order = np.argsort(dids, kind="stable")
-                for row_i, qi in enumerate(qidx):
-                    row = S[row_i, did_order]
-                    sel = did_order[np.argsort(-row, kind="stable")[:kk]]
-                    out_q.append(np.repeat(q_ids[qi], len(sel)))
-                    out_d.append(dids[sel])
-                    out_s.append(S[row_i, sel])
+                sel = topn_sel(S, dids, k)
+                out_q.append(np.repeat(q_ids[qidx], sel.shape[1]))
+                out_d.append(dids[sel].ravel())
+                out_s.append(np.take_along_axis(S, sel, axis=1).ravel())
             if not out_q:
                 continue
             yield pd.DataFrame(
@@ -1473,88 +1428,6 @@ def semdedup_assign(
     )
 
 
-def semdedup_assign_fast(
-    emb: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_id_col: str = "cent_id",
-    cent_vec_col: str = "cvec",
-    carry_vec: bool = False,
-    score_dtype: str = "float64",
-) -> DataFrame:
-    """BLAS twin of :func:`semdedup_assign` (same contract as
-    :func:`ivf_assign_fast` vs :func:`ivf_assign`): one narrow Arrow stage,
-    one matmul per batch against the broadcast normalized centroid matrix,
-    argmax ties broken ascending cent_id. float64 by default, so
-    divergence from the window form is confined to near-exact ties;
-    ``score_dtype="float32"`` runs the matmul in single precision on the
-    natively-float32 Arrow batch (no upcast pass — measured 2x on the 1M
-    bench assignment, which dominates the fused pipeline).
-
-    ``carry_vec=True`` additionally emits the input vector column — the
-    fused form :func:`semdedup` uses so the whole pipeline has exactly ONE
-    Exchange (the cent_id group shuffle) instead of an id-keyed
-    vector-rejoin. Null vectors are treated as zero vectors (cosine 0 with
-    everything → assigned to the lowest cent_id, always kept)."""
-    import numpy as np
-    import pandas as pd
-
-    crows = centroids.select(cent_id_col, cent_vec_col).collect()
-    if not crows:
-        raise ValueError("semdedup_assign_fast: centroids relation is empty")
-    cids = np.array([r[0] for r in crows])
-    C = np.array([r[1] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = np.divide(C, cn, out=np.zeros_like(C), where=cn > 0)
-    f32 = score_dtype == "float32"
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (cids, Cn.astype(np.float32) if f32 else Cn)
-    )
-
-    dt = dict(emb.dtypes)
-    id_t, vec_t = dt[id_col], dt[vec_col]
-    cent_t = dict(centroids.dtypes)[cent_id_col]
-    schema = f"`{id_col}` {id_t}, `{cent_id_col}` {cent_t}, cent_sim double"
-    if carry_vec:
-        schema += f", `{vec_col}` {vec_t}"
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_cids, Cm = bc.value
-        order = np.argsort(all_cids, kind="stable")
-        Cm_o, cids_o = Cm[order], all_cids[order]
-        dim = Cm_o.shape[1]
-        want = np.float32 if f32 else np.float64
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            col = pdf[vec_col]
-            if col.isna().any():
-                D = np.array(
-                    [v if v is not None else [0.0] * dim for v in col],
-                    dtype=want,
-                )
-            else:
-                # Arrow hands list<float> cells back as float32 ndarrays;
-                # stack is a per-row memcpy, no python-level upcast loop
-                D = np.stack(col.to_numpy()).astype(want, copy=False)
-            dn = np.linalg.norm(D, axis=1, keepdims=True)
-            Dn = np.divide(D, dn, out=np.zeros_like(D), where=dn > 0)
-            S = Dn @ Cm_o.T  # (batch, k); cent_id-ascending columns, so
-            # np.argmax's first-max rule IS the ascending-cent_id tie-break
-            best = np.argmax(S, axis=1)
-            out = {
-                id_col: pdf[id_col].to_numpy(),
-                cent_id_col: cids_o[best],
-                "cent_sim": S[np.arange(len(best)), best].astype(np.float64),
-            }
-            if carry_vec:
-                out[vec_col] = col
-            yield pd.DataFrame(out)
-
-    return emb.select(id_col, vec_col).mapInPandas(assign, schema=schema)
-
-
 def semdedup_assign_inline(
     emb: DataFrame,
     centroids: DataFrame,
@@ -1570,30 +1443,27 @@ def semdedup_assign_inline(
     ``ivf_assign_inline`` minimum-data-motion shape with the cent_sim
     SemDeDup's keep-order needs.
 
-    Output ``(id, cent_id, cent_sim, vec)``, same kernel arithmetic and
-    tie-break as :func:`semdedup_assign_fast` (parity-tested).  Versus
-    the two r7b transports: the vectors cross INTO Python once (the
-    matmul needs them) but never back OUT (``assign="fast"``'s Arrow
-    re-encode of the fat column — the measured 13.5-20 s term), and
-    there is no id-keyed rejoin (``assign="fast_join"``'s extra JVM
-    shuffle of the vector relation).  The only Exchange left in the
-    whole SemDeDup plan is the cent_id group shuffle, which now moves
-    the vectors exactly once — strictly less data motion than either
-    prior form on every axis."""
-    import numpy as np
+    Output ``(id, cent_id, cent_sim, vec)``: the BLAS twin of
+    :func:`semdedup_assign` plus the carried vector — one matmul per
+    Arrow batch against the broadcast unit centroid matrix, argmax ties
+    broken ascending cent_id, float64 by default so divergence from the
+    window form is confined to near-exact ties (parity-tested).
+    ``score_dtype="float32"`` runs the matmul in single precision on the
+    natively-float32 Arrow batch (no upcast pass).  Null vectors score as
+    zero vectors (cosine 0 with everything: assigned to the lowest
+    cent_id, always kept).
 
+    Data motion: the vectors cross INTO Python once (the matmul needs
+    them) but never back OUT — an Arrow re-encode of the fat column was
+    the measured 13.5-20 s term of the r7b mapInPandas carry form — and
+    there is no id-keyed rejoin shuffling the vector relation a second
+    time.  The only Exchange in the whole SemDeDup plan is the cent_id
+    group shuffle, which moves the vectors exactly once."""
     from ..functions.arrow_udfs import nearest_centroid_sim_udf
 
-    crows = centroids.select(cent_id_col, cent_vec_col).collect()
-    if not crows:
-        raise ValueError("semdedup_assign_inline: centroids relation is empty")
-    cids = np.array([r[0] for r in crows])
-    C = np.array([r[1] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = np.divide(C, cn, out=np.zeros_like(C), where=cn > 0)
     f32 = score_dtype == "float32"
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (cids, Cn.astype(np.float32) if f32 else Cn)
+    bc = _broadcast_centroids(
+        centroids, cent_id_col, cent_vec_col, "semdedup_assign_inline", f32=f32
     )
     cent_type = centroids.schema[cent_id_col].dataType.simpleString()
     assign = nearest_centroid_sim_udf(cent_type, bc, f32)
@@ -1698,12 +1568,10 @@ def _semdedup_grid(
         def mat(col):
             vals = col.tolist()
             dim = next((len(v) for v in vals if v is not None), 0)
-            M = np.array(
+            return normalize_rows(np.array(
                 [v if v is not None else [0.0] * dim for v in vals],
                 dtype=np.float64,
-            )
-            n = np.linalg.norm(M, axis=1, keepdims=True)
-            return np.divide(M, n, out=np.zeros_like(M), where=n > 0)
+            ))
 
         T = mat(tg[vec_col])
         contrib = np.full(len(tg), -np.inf)
@@ -1784,21 +1652,15 @@ def semdedup(
       * ``"min_id"``: order (id asc) — deterministic baseline matching the
         keep-one convention of the MinHash pipelines.
 
-    Physical shape: ``assign="expr"`` (the declarative/oracle form) is
-    broadcast-cross-join + window assignment joined back to the vectors;
-    ``assign="fast"`` fuses assignment and vector transport into one
-    narrow Arrow matmul stage so the ONLY Exchange in the plan is the
-    cent_id group shuffle (plan-gated) — vectors cross the network once,
-    the network-bound-cluster choice; ``assign="fast_join"`` emits a
-    skinny assignment and re-attaches vectors with a JVM shuffle join —
-    2x vector shuffle volume but no Arrow re-encode of the vector column
-    out of Python, the r7b winner of the fast/fast_join pair;
-    ``assign="inline"`` (r14) computes (cent_id, cent_sim) as a
-    scalar-UDF struct on the CARRIED row — no Arrow re-encode OUT of
-    Python AND no rejoin, vectors shuffle exactly once (the cent_id
-    group), strictly less data motion than both fast forms (the bench
-    path; parity-tested vs fast_join). The kernel runs the triangular
-    max as tiled BLAS (block_rows x block_rows tiles), so memory is
+    Physical shape, ``assign`` in {``"expr"``, ``"inline"``}:
+    ``"expr"`` (the declarative/oracle form) is broadcast-cross-join +
+    window assignment joined back to the vectors; ``"inline"`` (r14, the
+    catalog and bench path) computes (cent_id, cent_sim) as a scalar-UDF
+    struct on the CARRIED row (:func:`semdedup_assign_inline`) — no Arrow
+    re-encode OUT of Python and no rejoin, so the ONLY Exchange in the
+    plan is the cent_id group shuffle (plan-gated) and the vectors cross
+    the network once (parity-tested vs ``"expr"``). The kernel runs the
+    triangular max as tiled BLAS (block_rows x block_rows tiles), so memory is
     O(block^2 + b*dim) per cluster, never O(b^2). Cluster size is the
     bounded unit — pick k ~ sqrt(n) (paper: fixed k ~ 11k at web scale) so
     per-cluster cost stays flat as the corpus grows; the hot path is
@@ -1818,42 +1680,17 @@ def semdedup(
     if keep not in ("far", "min_id"):
         raise ValueError(f"semdedup: unknown keep policy {keep!r}")
     if assign == "inline":
-        # r14: scalar-UDF struct assignment — vectors cross into Python
-        # once (the matmul), never back out, no id rejoin; the cent_id
-        # group shuffle is the plan's ONLY Exchange and moves the
-        # vectors exactly once.  Minimum data motion of the three fast
-        # transports on every axis (see semdedup_assign_inline).
         rows = semdedup_assign_inline(
             emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col,
             score_dtype=score_dtype,
         )
-    elif assign == "fast":
-        # fused: the narrow Arrow assigner carries the vector through, so
-        # the ONLY Exchange in the whole plan is the cent_id group shuffle
-        # — vectors cross the network ONCE (the network-bound choice)
-        rows = semdedup_assign_fast(
-            emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col,
-            carry_vec=True, score_dtype=score_dtype,
-        )
-    elif assign == "fast_join":
-        # skinny assignment (24 B/row out of Python) + JVM shuffle join:
-        # vectors shuffle twice (id join + cent_id group) but NEVER
-        # re-encode through Arrow on the way OUT of the assigner —
-        # interleaved 1M x 512 A/B on local[32]: fused-carry 13.5-20 s,
-        # broadcast-join 8-11 s, shuffle-join 5.7-7 s (the Python Arrow
-        # re-encode of the 2 GiB vec column costs more than an in-memory
-        # JVM shuffle; on a network-bound cluster the trade flips — same
-        # finding as span_dedup's chunks-vs-keys strategies)
-        asg = semdedup_assign_fast(
-            emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col,
-            carry_vec=False, score_dtype=score_dtype,
-        )
-        rows = emb.select(id_col, vec_col).join(asg, id_col)
-    else:
+    elif assign == "expr":
         asg = semdedup_assign(
             emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col
         )
         rows = emb.select(id_col, vec_col).join(asg, id_col)
+    else:
+        raise ValueError(f"semdedup: unknown assign {assign!r} (expr|inline)")
 
     dt = dict(emb.dtypes)
     id_t, vec_t = dt[id_col], dt[vec_col]
@@ -1878,8 +1715,7 @@ def semdedup(
             )
         else:
             M = np.stack(col.to_numpy()).astype(np.float64, copy=False)
-        nrm = np.linalg.norm(M, axis=1, keepdims=True)
-        Mn = np.divide(M, nrm, out=np.zeros_like(M), where=nrm > 0)
+        Mn = normalize_rows(M)
         if kp == "far":
             order = np.lexsort((ids, cs))  # cent_sim asc, then id asc
         else:
@@ -1963,7 +1799,7 @@ def write_semdedup_index(
     n_buckets: int = 32,
 ) -> dict:
     """Build and PERSIST the incremental-SemDeDup corpus state: runs the
-    fused keep="min_id" pipeline over the corpus and stores
+    ``assign="inline"`` keep="min_id" pipeline over the corpus and stores
 
     * ``<prefix>_members`` — EVERY corpus row ``(id, cent_id, cent_sim,
       kept, vec)`` as a ``bucketBy(n_buckets, cent_id)`` warehouse table:
@@ -1985,7 +1821,7 @@ def write_semdedup_index(
     spark = emb.sparkSession
     res = semdedup(
         emb, centroids, threshold=threshold, keep="min_id",
-        id_col=id_col, vec_col=vec_col, assign="fast", emit_vec=True,
+        id_col=id_col, vec_col=vec_col, assign="inline", emit_vec=True,
     )
     (
         res.write.mode("overwrite").format("parquet")
@@ -2027,10 +1863,11 @@ def incremental_semdedup(
     future arrivals under the released rule) are appended, bucket spec
     preserved.
 
-    Physical shape: batch assignment is the fused narrow Arrow stage; the
-    compare is a cent_id cogroup where the stored side streams from the
-    bucketed table (scanned and probed, never re-scored internally); per
-    batch the only new shuffle is the batch's own cent_id grouping.
+    Physical shape: batch assignment is :func:`semdedup_assign_inline`
+    (the vector rides along in the JVM row); the compare is a cent_id
+    cogroup where the stored side streams from the bucketed table
+    (scanned and probed, never re-scored internally); per batch the only
+    new shuffle is the batch's own cent_id grouping.
     """
     import numpy as np
     import pandas as pd
@@ -2043,9 +1880,7 @@ def incremental_semdedup(
     stored = spark.read.table(f"{table_prefix}_members")
     cents = spark.read.table(f"{table_prefix}_cents")
 
-    batch = semdedup_assign_fast(
-        new_emb, cents, id_col, vec_col, carry_vec=True
-    )
+    batch = semdedup_assign_inline(new_emb, cents, id_col, vec_col)
 
     dt = dict(new_emb.dtypes)
     id_t, vec_t = dt[id_col], dt[vec_col]
@@ -2064,21 +1899,17 @@ def incremental_semdedup(
             return empty[[id_col, "cent_id", "cent_sim", "kept", vec_col]]
         ids = bpdf[id_col].to_numpy()
         dim = next((len(v) for v in bpdf[vec_col] if v is not None), 0)
-        B = np.array(
+        Bn = normalize_rows(np.array(
             [v if v is not None else [0.0] * dim for v in bpdf[vec_col]],
             dtype=np.float64,
-        )
-        bn = np.linalg.norm(B, axis=1, keepdims=True)
-        Bn = np.divide(B, bn, out=np.zeros_like(B), where=bn > 0)
+        ))
         order = np.argsort(ids, kind="stable")
         Bo = Bn[order]
         b = len(ids)
         # max cosine vs the stored cluster members (all "earlier"), tiled
         base = np.full(b, -np.inf)
         if not spdf.empty:
-            S_ = np.array(spdf[vec_col].tolist(), dtype=np.float64)
-            sn = np.linalg.norm(S_, axis=1, keepdims=True)
-            Sn = np.divide(S_, sn, out=np.zeros_like(S_), where=sn > 0)
+            Sn = normalize_rows(np.array(spdf[vec_col].tolist(), dtype=np.float64))
             for rs in range(0, len(Sn), block_rows):
                 G = Sn[rs : rs + block_rows] @ Bo.T
                 base = np.maximum(base, G.max(axis=0))

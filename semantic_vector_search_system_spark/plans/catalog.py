@@ -4463,7 +4463,8 @@ def semdedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's DuckDB hash verifies the benched code: scalar-UDF struct
     assignment on the carried row, then ONE cent_id-keyed shuffle into
     the tiled-BLAS grouped kernel (operators/similarity.py::semdedup).
-    Row-parity with the fused face is pytest-pinned at both scoring
+    Parity with the expr (oracle) face — cent_id and kept exact,
+    cent_sim within float tolerance — is pytest-pinned at both scoring
     dtypes (test_dedup_textanalysis.py::
     test_semdedup_inline_strategy_parity_and_single_exchange), so the
     hash must not move — verified at sf0.001/sf0.01 before the flip."""

@@ -34,13 +34,6 @@ def summary_by_size_and_model(results: DataFrame, metric_cols: list[str]) -> Dat
     return results.groupBy("n_docs", "model_name").agg(*aggs).orderBy("n_docs", "model_name")
 
 
-def group_medians(results: DataFrame, group_col: str, metric: str) -> DataFrame:
-    """A10: per-group exact medians (`analyze_and_report.py:86-88`)."""
-    return results.groupBy(group_col).agg(
-        F.expr(f"percentile({metric}, 0.5)").alias(f"median_{metric}")
-    )
-
-
 def welch_t_components(results: DataFrame, group_col: str, metric: str) -> DataFrame:
     """A12 distributed part: per-group n/mean/variance — everything Welch's
     t needs, computed scalably; the t statistic itself is arithmetic."""

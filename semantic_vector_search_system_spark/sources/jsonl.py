@@ -82,11 +82,6 @@ def read_result_records(spark: SparkSession, results_dir: str, pattern: str = "a
     )
 
 
-def write_result_record(record: DataFrame, path: str) -> None:
-    """S12: per-run JSON record sink."""
-    record.coalesce(1).write.mode("overwrite").json(path)
-
-
 def write_summary_csv(df: DataFrame, path: str) -> None:
     """S13: summary CSV sink (header on, single file like the reference's
     pandas ``to_csv``)."""

@@ -27,6 +27,11 @@ import pyarrow  # noqa: F401
 # to run the task loop.
 import pyspark.worker  # noqa: F401
 
+# The shared numpy kernels the BLAS faces' pickled closures reference by
+# module (normalize_rows, topn_sel): inherited here, a forked worker
+# unpickles them without importing the package (~2 ms per task).
+import semantic_vector_search_system_spark.functions.vectors  # noqa: F401
+
 # pyspark.daemon reads sys.argv at import time to pick the worker module
 # (defaults to pyspark.worker), identically to being launched directly.
 import pyspark.daemon as _daemon

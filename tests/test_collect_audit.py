@@ -79,11 +79,10 @@ ALLOWED: dict[str, dict[str, int]] = {
         "row = scored.collect()[0]": 1,
         # raise-guarded by max_rows count immediately above (bounded matmul)
         "rows = emb.select(id_col, vec_col).collect()": 1,
-        # tiny centroid relation (n_lists/k rows) for the BLAS IVF and
-        # SemDeDup assignment kernels (+ the r13 inline-assign UDF form)
-        # x4 since r14: semdedup_assign_inline added a fourth centroid
-        # collect (same tiny n_lists x dim relation, broadcast once)
-        "crows = centroids.select(cent_id_col, cent_vec_col).collect()": 4,
+        # tiny centroid relation (n_lists/k rows), collected once and
+        # broadcast by _broadcast_centroids — the one site behind the BLAS
+        # IVF and SemDeDup assignment kernels (fast + inline-UDF forms)
+        "crows = centroids.select(cent_id_col, cent_vec_col).collect()": 1,
         # partition-pruning predicate: bounded by queries x nprobe and the
         # max_probed_lists limit+raise guard
         'q_lists.select("cent_id").distinct().limit(max_probed_lists + 1).collect()': 1,

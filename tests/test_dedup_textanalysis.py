@@ -1495,7 +1495,7 @@ def test_semdedup_far_policy_triangular_chain(spark):
         [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0])],
         "cent_id bigint, cvec array<double>",
     )
-    for mode in ("expr", "fast"):
+    for mode in ("expr", "inline"):
         out = {r["vec_id"]: r for r in
                semdedup(emb, cents, threshold=0.9, keep="far", assign=mode).collect()}
         # id 3 (40deg) has the LOWEST cent_sim -> first in order -> kept;
@@ -1512,9 +1512,9 @@ def test_semdedup_far_policy_triangular_chain(spark):
 
 
 def test_semdedup_expr_fast_parity(spark):
-    """The declarative (oracle) and fused-Arrow forms agree row-for-row on
-    real data: same assignment, same keep decision, cent_sim within float
-    tolerance."""
+    """The declarative (oracle) and fast (inline scalar-UDF) forms agree
+    row-for-row on real data: same assignment, same keep decision,
+    cent_sim within float tolerance."""
     from semantic_vector_search_system_spark.operators.similarity import semdedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1524,7 +1524,7 @@ def test_semdedup_expr_fast_parity(spark):
     a = {r["vec_id"]: r for r in
          semdedup(emb, cents, threshold=0.32, keep="far", assign="expr").collect()}
     b = {r["vec_id"]: r for r in
-         semdedup(emb, cents, threshold=0.32, keep="far", assign="fast").collect()}
+         semdedup(emb, cents, threshold=0.32, keep="far", assign="inline").collect()}
     assert set(a) == set(b) and len(a) == 500
     for vid in a:
         assert a[vid]["cent_id"] == b[vid]["cent_id"]
@@ -1582,22 +1582,22 @@ def test_semdedup_matches_python_oracle(spark):
         expect = py_semdedup(keep)
         got = {r["vec_id"]: r["kept"] for r in
                semdedup(emb, cents, threshold=tau, keep=keep,
-                        assign="fast", block_rows=32).collect()}
+                        assign="inline", block_rows=32).collect()}
         assert got == expect, keep
         assert sum(1 for v in expect.values() if not v) >= 15  # planted dups fired
 
 
 def test_semdedup_fast_form_single_exchange(spark):
-    """100 TB property of the fused form: assignment+vector transport is
-    one narrow Arrow stage; the ONLY Exchange in the whole plan is the
-    cent_id group shuffle."""
+    """100 TB property of the fast (inline) form: the assignment rides on
+    the carried row with no rejoin; the ONLY Exchange in the whole plan is
+    the cent_id group shuffle."""
     from semantic_vector_search_system_spark.operators.similarity import semdedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = emb.filter("vec_id < 8").selectExpr(
         "vec_id AS cent_id", "embedding AS cvec"
     )
-    plan = semdedup(emb, cents, threshold=0.32, assign="fast")._jdf.queryExecution().executedPlan().toString()
+    plan = semdedup(emb, cents, threshold=0.32, assign="inline")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan[:4000]
 
 
@@ -1612,7 +1612,7 @@ def test_semdedup_null_vector_treated_as_zero(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cent_id bigint, cvec array<double>"
     )
     out = {r["vec_id"]: r for r in
-           semdedup(emb, cents, threshold=0.9, keep="min_id", assign="fast").collect()}
+           semdedup(emb, cents, threshold=0.9, keep="min_id", assign="inline").collect()}
     assert out[3]["kept"] and out[3]["cent_id"] == 0 and out[3]["cent_sim"] == 0.0
     assert out[1]["kept"] and not out[2]["kept"]
 
@@ -1651,7 +1651,7 @@ def test_incremental_semdedup_equals_full_corpus_run(spark):
     )
     full = {r["vec_id"]: (r["cent_id"], r["kept"]) for r in
             semdedup(emb, cents, threshold=tau, keep="min_id",
-                     assign="fast").collect()}
+                     assign="inline").collect()}
     assert sum(1 for _, kk in full.values() if not kk) >= 5
 
     for t in ("inc_sd_members", "inc_sd_cents", "inc_sd_meta"):
@@ -1780,51 +1780,35 @@ def test_semdedup_float32_scoring_parity_on_separated_data(spark):
         "cent_id bigint, cvec array<double>",
     )
     f64 = {r["vec_id"]: r["kept"] for r in semdedup(
-        emb, cents, threshold=0.9, keep="far", assign="fast").collect()}
+        emb, cents, threshold=0.9, keep="far", assign="inline").collect()}
     f32 = {r["vec_id"]: r["kept"] for r in semdedup(
-        emb, cents, threshold=0.9, keep="far", assign="fast",
+        emb, cents, threshold=0.9, keep="far", assign="inline",
         score_dtype="float32").collect()}
     assert f64 == f32 == {1: False, 2: False, 3: True, 4: True}
 
 
-def test_semdedup_fast_join_strategy_parity(spark):
-    """assign="fast_join" (skinny Python output + JVM vec join — the
-    measured local/CPU-bound winner) is row-identical to the fused
-    carry form on real data."""
-    from semantic_vector_search_system_spark.operators.similarity import semdedup
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = emb.filter("vec_id < 8").selectExpr(
-        "vec_id AS cent_id", "embedding AS cvec"
-    )
-    a = sorted(map(tuple, semdedup(
-        emb, cents, threshold=0.32, keep="far", assign="fast").collect()))
-    b = sorted(map(tuple, semdedup(
-        emb, cents, threshold=0.32, keep="far", assign="fast_join").collect()))
-    assert a == b
-
-
 def test_semdedup_inline_strategy_parity_and_single_exchange(spark):
-    """assign="inline" (r14, the bench path: scalar-UDF struct assignment
-    on the carried row — no Arrow re-encode of the vector column out of
-    Python AND no id rejoin) is row-identical to the fused carry form on
-    real data, at both scoring dtypes, and its plan keeps the fused
-    form's 100 TB property: the ONLY Exchange is the cent_id group
-    shuffle, which moves the vectors exactly once."""
+    """assign="inline" (r14, the catalog and bench path: scalar-UDF
+    struct assignment on the carried row — no Arrow re-encode of the
+    vector column out of Python AND no id rejoin) matches the declarative
+    oracle form on real data at both scoring dtypes — cent_id and kept
+    exactly, cent_sim within 1e-12 (float64) / 1e-6 (float32) — and its
+    plan's ONLY Exchange is the cent_id group shuffle, which moves the
+    vectors exactly once."""
     from semantic_vector_search_system_spark.operators.similarity import semdedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = emb.filter("vec_id < 8").selectExpr(
         "vec_id AS cent_id", "embedding AS cvec"
     )
-    for dt in ("float64", "float32"):
-        # value-pin BOTH scoring dtypes against the fused carry form at
-        # the SAME dtype (r14 ADVICE, low: the f32 inline path used to be
+    for dt, tol in (("float64", 1e-12), ("float32", 1e-6)):
+        # value-pin BOTH scoring dtypes against the oracle form at the
+        # SAME dtype (r14 ADVICE, low: the f32 inline path used to be
         # plan-gated only, leaving its keep-set unpinned)
-        a = sorted(map(tuple, semdedup(
-            emb, cents, threshold=0.32, keep="far", assign="fast",
+        a = {r["vec_id"]: r for r in semdedup(
+            emb, cents, threshold=0.32, keep="far", assign="expr",
             score_dtype=dt,
-        ).collect()))
+        ).collect()}
         plan_df = semdedup(
             emb, cents, threshold=0.32, keep="far", assign="inline",
             score_dtype=dt,
@@ -1833,7 +1817,12 @@ def test_semdedup_inline_strategy_parity_and_single_exchange(spark):
         # repeats the Exchange in its "Initial Plan" section
         plan = plan_df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 1, plan[:4000]
-        assert a == sorted(map(tuple, plan_df.collect())), dt
+        b = {r["vec_id"]: r for r in plan_df.collect()}
+        assert set(a) == set(b) and len(a) == 500, dt
+        for vid, ra in a.items():
+            rb = b[vid]
+            assert (ra["cent_id"], ra["kept"]) == (rb["cent_id"], rb["kept"]), (dt, vid)
+            assert abs(ra["cent_sim"] - rb["cent_sim"]) <= tol, (dt, vid)
 
 
 def test_semdedup_giant_cluster_guard_exact_and_bounded(spark):
@@ -1875,13 +1864,13 @@ def test_semdedup_giant_cluster_guard_exact_and_bounded(spark):
         plain = {
             r["vec_id"]: (r["cent_id"], round(r["cent_sim"], 9), r["kept"])
             for r in semdedup(
-                emb, cents, threshold=tau, keep=keep, assign="fast"
+                emb, cents, threshold=tau, keep=keep, assign="inline"
             ).collect()
         }
         guarded = {
             r["vec_id"]: (r["cent_id"], round(r["cent_sim"], 9), r["kept"])
             for r in semdedup(
-                emb, cents, threshold=tau, keep=keep, assign="fast",
+                emb, cents, threshold=tau, keep=keep, assign="inline",
                 max_cluster_rows=cap,
             ).collect()
         }
@@ -1892,14 +1881,14 @@ def test_semdedup_giant_cluster_guard_exact_and_bounded(spark):
     ungated_cap = {
         r["vec_id"]: r["kept"]
         for r in semdedup(
-            emb, cents, threshold=tau, keep="min_id", assign="fast",
+            emb, cents, threshold=tau, keep="min_id", assign="inline",
             max_cluster_rows=10_000,
         ).collect()
     }
     plain_min = {
         r["vec_id"]: r["kept"]
         for r in semdedup(
-            emb, cents, threshold=tau, keep="min_id", assign="fast"
+            emb, cents, threshold=tau, keep="min_id", assign="inline"
         ).collect()
     }
     assert ungated_cap == plain_min

@@ -4,6 +4,8 @@ physical top-k strategies."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -58,20 +60,6 @@ def test_physical_strategies_agree(spark, fixture_vecs):
     assert ra == rb
 
 
-def test_fused_mode_matches_distributed(spark, fixture_vecs):
-    """The single-task fused path (one stage, no window) must produce the
-    exact distributed result — string ids, tie-heavy hashing scores."""
-    qvec, dvec = fixture_vecs
-    a = topk_bruteforce(qvec, dvec, k=4)
-    b = topk_bruteforce(qvec, dvec, k=4, mode="fused")
-    ra = sorted((r["qid"], r["docid"], r["rank"], round(r["score"], 9)) for r in a.collect())
-    rb = sorted((r["qid"], r["docid"], r["rank"], round(r["score"], 9)) for r in b.collect())
-    assert ra == rb
-    # plan shape: no shuffle exchange anywhere in the fused plan
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
 def test_broadcast_index_mode_matches_distributed(spark, fixture_vecs):
     """The serving-shape path (index collected+broadcast once, each search a
     no-input-scan task) must produce the exact distributed result, in both
@@ -103,20 +91,19 @@ def test_broadcast_index_mode_matches_distributed(spark, fixture_vecs):
 
 def test_float32_scoring_matches_float64_topk(spark, fixture_vecs):
     """float32 scoring (reference-parity arithmetic) must rank the same
-    docs in fused and distributed modes on the fixture corpus."""
+    docs as float64 scoring on the fixture corpus."""
     qvec, dvec = fixture_vecs
     a = topk_bruteforce(qvec, dvec, k=4)
-    b = topk_bruteforce(qvec, dvec, k=4, mode="fused", score_dtype="float32")
     c = topk_bruteforce(qvec, dvec, k=4, score_dtype="float32")
     ra = sorted((r["qid"], r["docid"], r["rank"]) for r in a.collect())
-    rb = sorted((r["qid"], r["docid"], r["rank"]) for r in b.collect())
     rc = sorted((r["qid"], r["docid"], r["rank"]) for r in c.collect())
-    assert ra == rb == rc
+    assert ra == rc
 
 
-def test_fused_mode_matches_distributed_long_ids_multibatch(spark):
-    """Fused merge across multiple Arrow batches with numeric ids and
-    forced score ties at the k boundary."""
+def test_distributed_matches_expr_long_ids_multibatch(spark):
+    """The distributed partial top-k merged across many Arrow batches
+    (maxRecordsPerBatch=100) equals the declarative form with numeric ids
+    and cosine scoring."""
     n = 5000
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5).select(
@@ -126,7 +113,7 @@ def test_fused_mode_matches_distributed_long_ids_multibatch(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
     try:
         a = topk_bruteforce(q, d, k=7, metric="cosine")
-        b = topk_bruteforce(q, d, k=7, metric="cosine", mode="fused")
+        b = topk_bruteforce_expr(q, d, k=7, metric="cosine")
         ra = sorted((r["qid"], r["docid"], r["rank"]) for r in a.collect())
         rb = sorted((r["qid"], r["docid"], r["rank"]) for r in b.collect())
     finally:
@@ -316,3 +303,49 @@ def test_topk_bruteforce_heap_ranker_agrees(spark, fixture_vecs):
     ra = sorted((r["qid"], r["docid"], r["rank"], round(r["score"], 9)) for r in a.collect())
     rb = sorted((r["qid"], r["docid"], r["rank"], round(r["score"], 9)) for r in b.collect())
     assert ra == rb
+
+
+@pytest.mark.parametrize(
+    "knob, bad",
+    [
+        ("semdedup.assign", "inlin"),
+        ("topk_bruteforce.mode", "distributd"),
+        ("topk_bruteforce.ranker", "windw"),
+        ("ivf_search_partitioned.strategy", "broadcst"),
+    ],
+)
+def test_unknown_knob_value_raises(spark, fixture_vecs, knob, bad):
+    """A typo in a physical-face knob raises naming the allowed values
+    instead of silently running some other face — including
+    ivf_search_partitioned's strategy on the precollected-queries path."""
+    from semantic_vector_search_system_spark.operators.similarity import (
+        ivf_search_partitioned,
+        semdedup,
+    )
+
+    qvec, dvec = fixture_vecs
+    cents = dvec.selectExpr("docid AS cent_id", "vec AS cvec")
+    calls = {
+        "semdedup.assign": (
+            lambda: semdedup(dvec, cents, id_col="docid", vec_col="vec", assign=bad),
+            "expr|inline",
+        ),
+        "topk_bruteforce.mode": (
+            lambda: topk_bruteforce(qvec, dvec, k=2, mode=bad),
+            "distributed|broadcast_index",
+        ),
+        "topk_bruteforce.ranker": (
+            lambda: topk_bruteforce(qvec, dvec, k=2, ranker=bad),
+            "window|heap",
+        ),
+        "ivf_search_partitioned.strategy": (
+            lambda: ivf_search_partitioned(
+                spark, "/nonexistent-index", cents, qvec, strategy=bad,
+                precollected_queries=[("q1", [0.0] * DIM)],
+            ),
+            "auto|broadcast|cogroup",
+        ),
+    }
+    call, allowed = calls[knob]
+    with pytest.raises(ValueError, match=re.escape(f"{bad!r} ({allowed})")):
+        call()
