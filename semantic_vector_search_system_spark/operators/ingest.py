@@ -37,13 +37,13 @@ def ingest_to_index(
 ) -> Row:
     """Encode-agnostic timed ingest into the Parquet index; returns the
     reference-shaped ingest summary row (A7)."""
-    from ..sources.parquet_index import write_vector_index
+    from ..sources.parquet_index import read_vector_index, write_vector_index
 
     t0 = time.time()
     write_vector_index(vectors, path, partition_by=partition_by)
     total_time = time.time() - t0
     spark = vectors.sparkSession
-    n = spark.read.parquet(path).count()
+    n = read_vector_index(spark, path).count()
     return Row(
         total_items=n,
         total_time_s=round(total_time, 6),

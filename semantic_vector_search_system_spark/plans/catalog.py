@@ -3056,6 +3056,7 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet_index import (
         compact_vector_index,
         delete_from_vector_index,
+        read_vector_index,
         upsert_vector_index,
         write_vector_index,
     )
@@ -3099,7 +3100,7 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             id_col="vec_id",
         )
         compact_vector_index(spark, path, id_col="vec_id", partition_by="cent_id")
-        final = spark.read.parquet(path)
+        final = read_vector_index(spark, path)
         out = final.groupBy(F.col("cent_id").cast("long").alias("cent_id")).agg(
             F.count("*").alias("n_live"),
             F.sum("_batch").cast("long").alias("n_from_updates"),

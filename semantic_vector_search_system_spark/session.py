@@ -10,6 +10,7 @@ AQE can coalesce down rather than a hardcoded small number it cannot raise.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -25,6 +26,15 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``) when
     not running under a cluster manager; on a real cluster pass ``None`` and
     submit with ``--master``.
+
+    On a ``local[...]`` master, parallel partition discovery (the Spark job
+    that lists a table's directories once there are more than
+    ``parallelPartitionDiscovery.threshold`` of them, e.g. an IVF index's
+    ``cent_id=<v>`` lists) runs as many tasks as the master has cores, not
+    one task per directory: each task is a short driver-side Hadoop
+    listing, so more tasks than cores only adds scheduling rounds.  The
+    threshold itself is left alone — raising it would move object-store
+    listing onto the driver, serially.
     """
     # One BLAS thread per task: Spark is the parallelism layer (N concurrent
     # tasks each calling numpy); letting OpenBLAS spin its own pool on top
@@ -96,6 +106,25 @@ def get_spark(
         builder = builder.config("spark.python.unix.domain.socket.enabled", "true")
     if master:
         builder = builder.master(master)
+        cores = _local_cores(master)
+        if cores:
+            builder = builder.config(
+                "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+                str(cores),
+            )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _local_cores(master: str) -> int | None:
+    """Core count of a ``local[N]``, ``local[N,F]`` or ``local[*]`` master
+    (``None`` for any other master)."""
+    m = re.fullmatch(r"local\[(\*|\d+)(?:,\s*\d+)?\]", master.strip())
+    if m is None:
+        return None
+    if m.group(1) != "*":
+        return int(m.group(1))
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count()

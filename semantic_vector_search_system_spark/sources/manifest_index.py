@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .parquet_index import _norm_path
+from .parquet_index import _norm_path, _open_index
 
 _POINTER = "current.json"
 
@@ -174,7 +174,7 @@ def read_manifest_index(spark: SparkSession, path: str) -> DataFrame:
     moment earlier keep a consistent view: generations are immutable,
     and the grace policy keeps the previous committed directory until
     the commit after next)."""
-    return spark.read.parquet(current_gen_dir(path))
+    return _open_index(spark, current_gen_dir(path))
 
 
 def rewrite_manifest_index(

@@ -44,6 +44,10 @@ from pyspark.sql import functions as F
 #: incomplete write and must never be promoted.
 _SUCCESS_MARKER = "_SUCCESS"
 
+#: Footer key under which Spark's parquet writer stores the row schema
+#: (the schema Spark's own inference job reads back from one file).
+_SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+
 #: Superseded-probe partition pruning is skipped above this many distinct
 #: touched partition values — an ``isin`` list that large stops being a
 #: cheap partition filter and the full thin probe wins.
@@ -104,7 +108,68 @@ def write_vector_index(
 def read_vector_index(spark: SparkSession, path: str) -> DataFrame:
     """S7: reopen the index (schema travels with the Parquet footer —
     no dim probe needed, unlike the reference's 8-doc sample)."""
-    return spark.read.parquet(_norm_path(path))
+    return _open_index(spark, _norm_path(path))
+
+
+def _first_data_file(root: str) -> str | None:
+    """The first data file under ``root`` in name order (``root`` itself
+    when it is a file), skipping what Spark's file index skips:
+    ``_``/``.``-prefixed names (``_SUCCESS``, ``_temporary/``, ``.crc``
+    checksums) and the directories below them."""
+    if not os.path.isdir(root):
+        return root if os.path.isfile(root) else None
+    for entry in sorted(os.scandir(root), key=lambda e: e.name):
+        if entry.name.startswith(("_", ".")):
+            continue
+        found = _first_data_file(entry.path) if entry.is_dir() else entry.path
+        if found is not None:
+            return found
+    return None
+
+
+def _footer_schema(path: str):
+    """Spark's schema of the data files under a LOCAL parquet table,
+    read from one data file's footer (the row-schema JSON Spark's writer
+    stores there) — the same schema Spark's inference job would read,
+    without the job.  Partition columns are not in it: Spark still infers
+    them from the directory names.
+
+    ``None`` (keep Spark's inference) for URI paths, relative paths (Spark
+    resolves those against the JVM's working directory, not Python's),
+    tables without a data file, and files no Spark writer produced.  A
+    footer that cannot be read raises: an unreadable tombstone table must
+    fail the read, never serve unmasked."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    if "://" in path or not os.path.isabs(path):
+        return None
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return None
+    row_meta = (pq.read_metadata(data_file).metadata or {}).get(_SPARK_ROW_META)
+    if row_meta is None:
+        return None
+    return StructType.fromJson(json.loads(row_meta))
+
+
+def _open_index(
+    spark: SparkSession, path: str, dirs: list[str] | None = None
+) -> DataFrame:
+    """Open a parquet table — the package's one way to open an index or
+    its tombstone table.  On local paths the schema comes from one data
+    file's footer (:func:`_footer_schema`), so opening runs no
+    schema-inference Spark job; Spark still lists the files and infers
+    partition columns from the directory names.  ``dirs`` opens only
+    those partition directories of the table at ``path`` (``basePath`` =
+    ``path``, so the partition columns stay columns)."""
+    reader = spark.read
+    schema = _footer_schema(path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    if dirs:
+        return reader.option("basePath", path).parquet(*dirs)
+    return reader.parquet(path)
 
 
 def _norm_path(path: str) -> str:
@@ -188,7 +253,7 @@ def read_optional_parquet(spark: SparkSession, path: str) -> DataFrame | None:
     if "://" not in path and not os.path.exists(path):
         return None
     try:
-        return spark.read.parquet(path)
+        return _open_index(spark, path)
     except AnalysisException as e:
         cls = getattr(e, "getErrorClass", lambda: None)() or ""
         if "PATH_NOT_FOUND" in str(cls) or "PATH_NOT_FOUND" in str(e):
@@ -262,6 +327,17 @@ def upsert_vector_index(
       the update batch never names and a pruned probe would miss it,
       leaving BOTH generations live.  Counterexample pinned in
       tests/test_sources_ingest.py; default stays the full thin probe.
+
+    Spark jobs per call, for a local index with its sidecar and a
+    tombstone table: 9 when the batch supersedes rows — the duplicate-id
+    gate (3: its distinct count is a shuffle), the index listing (1, as
+    wide as ``parallelPartitionDiscovery.parallelism``, which
+    ``session.get_spark`` sets to the core count), the append (1), the
+    probe's two broadcasts, update keys and tombstone mask (2), the
+    probe's checkpoint (1) and the tombstone append (1).  Opening the
+    index and the tombstone table runs no schema-inference job
+    (:func:`_open_index`), and the superseded count is an
+    ``Observation`` on the checkpoint, not a ``count()``.
 
     Generation discipline (r11 ADVICE): ``batch=None`` (default)
     auto-assigns ``max(live _batch) + 1``; an explicit ``batch`` must be
@@ -344,7 +420,9 @@ def upsert_vector_index(
     batch = int(batch)
     if "://" not in path:
         _claim_max_batch(path, batch)  # claim BEFORE the append
-    keys = F.broadcast(updates.select(id_col).distinct())
+    # no distinct(): the duplicate-id gate above already raised on any
+    # repeated id, so a distinct would only add a shuffle job
+    keys = F.broadcast(updates.select(id_col))
     obs = Observation()
     updates = updates.withColumn("_batch", F.lit(batch)).observe(
         obs, F.count(F.lit(1)).alias("n")
@@ -365,12 +443,19 @@ def upsert_vector_index(
         # guide §1.2).  The materialized relation is churn-bounded.
         # The probe scans ``stored`` — the pre-append snapshot opened
         # above — instead of re-opening (and re-listing) the index.
-        superseded = _superseded_probe(
-            spark, stored, path, keys, batch, id_col, partition_by, touched
-        ).localCheckpoint()
-        # count() doubles as the skip-gate: zero superseded -> no
-        # tombstone append at all (pure-insert batches stay one write)
-        replaced = superseded.count()
+        sup_obs = Observation()
+        superseded = (
+            _superseded_probe(
+                spark, stored, path, keys, batch, id_col, partition_by, touched
+            )
+            .observe(sup_obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
+        # the row count rides the checkpoint's own job (a count() over
+        # the checkpoint cost two more) and doubles as the skip-gate:
+        # zero superseded -> no tombstone append at all (pure-insert
+        # batches stay one write)
+        replaced = int(sup_obs.get["n"])
         if replaced:
             superseded.write.mode("append").format("parquet").save(
                 _tombstones_path(path)
@@ -441,7 +526,7 @@ def read_live_index(
     read error propagates.  Serving unmasked on a transient error would
     silently resurrect deleted/superseded vectors."""
     path = _norm_path(path)
-    return _mask_tombstones(spark, spark.read.parquet(path), path, id_col)
+    return _mask_tombstones(spark, _open_index(spark, path), path, id_col)
 
 
 def _mask_tombstones(
@@ -583,7 +668,7 @@ def observed_live_view(
 
     obs_all = Observation()
     obs_live = Observation()
-    index = spark.read.parquet(_norm_path(path)).observe(
+    index = _open_index(spark, _norm_path(path)).observe(
         obs_all, F.count(F.lit(1)).alias("n")
     )
     live = index.join(

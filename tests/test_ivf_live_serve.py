@@ -2,9 +2,11 @@
 
 A live single-query serve over a ``partitionBy(cent_id)`` index opens only
 the probed lists' directories (no file-listing job, whatever the list
-count) and, with ``merge="driver"``, returns a ``LocalTableScan`` whose
-collect runs no job.  An upsert opens the index once.  Results are checked
-against a NumPy top-k over the live rows of the probed lists.
+count) with the schema read from a file footer (no inference job) and,
+with ``merge="driver"``, returns a ``LocalTableScan`` whose collect runs no
+job.  An upsert opens the index once and runs at most 9 jobs, none wider
+than the cores; assigning against a trained codebook runs none.  Results
+are checked against a NumPy top-k over the live rows of the probed lists.
 """
 
 from __future__ import annotations
@@ -130,11 +132,11 @@ def test_live_serve_runs_no_listing_job_and_collects_job_free(spark, live_index)
     res, jobs, tasks = _group_stages(
         spark, "ivf_live_serve", lambda: _serve(spark, st, q)
     )
-    # the listing job of the parent form had one task per list directory
-    # (40); every remaining stage is a schema probe, the tombstone
-    # broadcast, or the 1-2 file pruned scan
+    # no listing job (it had one task per list directory, 40) and no
+    # schema-inference job (the schema comes from a file footer): the two
+    # jobs left are the tombstone broadcast and the 1-2 file pruned scan
     assert jobs and max(tasks) < N_LISTS, tasks
-    assert len(jobs) <= 4, (jobs, tasks)
+    assert len(jobs) <= 2, (jobs, tasks)
     # the merged result is local rows: no Spark job to collect it
     assert "LocalTableScan" in res._jdf.queryExecution().executedPlan().toString()
     rows, cjobs, _ = _group_stages(spark, "ivf_live_collect", res.collect)
@@ -215,3 +217,79 @@ def test_upsert_opens_the_index_once(spark, live_index, monkeypatch):
         ("d0", out["batch"], 0), ("d1", out["batch"], 1),
     ]
     st["live"].update({"d0": (st["C"][0], 0), "d1": (st["C"][1], 1)})
+
+
+def test_open_index_schema_matches_spark_inference(spark, live_index):
+    from semantic_vector_search_system_spark.sources.parquet_index import (
+        _footer_schema,
+        _open_index,
+    )
+
+    for path in (live_index["path"], live_index["path"] + "__tombstones"):
+        assert _footer_schema(path) is not None, path
+        assert _open_index(spark, path).schema == spark.read.parquet(path).schema
+    assert "cent_id" in _open_index(spark, live_index["path"]).columns
+    # the tombstone table is flat: opening it runs no Spark job at all
+    _, jobs, _ = _group_stages(
+        spark, "open_tombstones",
+        lambda: _open_index(spark, live_index["path"] + "__tombstones"),
+    )
+    assert jobs == []
+
+
+def test_upsert_job_budget(spark, live_index):
+    from semantic_vector_search_system_spark.sources.parquet_index import (
+        upsert_vector_index,
+    )
+
+    st = live_index
+    C = st["C"]
+    moved = {f"d{i}": (C[(i + 3) % N_LISTS], (i + 3) % N_LISTS) for i in range(20, 26)}
+    upd = spark.createDataFrame(
+        [(d, v.tolist(), c) for d, (v, c) in moved.items()],
+        "docid string, vec array<double>, cent_id int",
+    )
+    out, jobs, tasks = _group_stages(
+        spark, "ivf_upsert",
+        lambda: upsert_vector_index(
+            spark, st["path"], upd, id_col="docid", partition_by="cent_id"
+        ),
+    )
+    assert out["upserted"] == 6 and out["replaced"] == 6, out
+    # gate (3), listing (1), append (1), keys + tombstone broadcasts (2),
+    # probe checkpoint (1), tombstone append (1)
+    assert len(jobs) <= 9, (jobs, tasks)
+    # the 40-directory listing runs as wide as the cores, not one task
+    # per directory
+    assert max(tasks) <= spark.sparkContext.defaultParallelism, tasks
+    st["live"].update(moved)
+    q = C[23] + 0.05
+    lists = _probed(C, q)
+    _check(_serve(spark, st, q).collect(), _expected(st["live"], lists, q))
+
+
+def test_assign_against_trained_codebook_runs_no_job(spark):
+    from semantic_vector_search_system_spark.operators.similarity import (
+        ivf_assign_inline,
+        train_ivf_centroids,
+    )
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, rng.normal(size=DIM).tolist()) for i in range(64)],
+        "vec_id int, embedding array<double>",
+    )
+    cents = train_ivf_centroids(emb, 4, seed=3, max_iter=3)
+    assert "LocalTableScan" in cents._jdf.queryExecution().executedPlan().toString()
+    assert [(f.name, f.dataType.simpleString()) for f in cents.schema.fields] == [
+        ("cent_id", "int"), ("cvec", "array<double>"),
+    ]
+    assigned, jobs, _ = _group_stages(
+        spark, "ivf_assign_codebook", lambda: ivf_assign_inline(emb, cents)
+    )
+    assert jobs == []
+    rows = assigned.collect()
+    C = np.array([r["cvec"] for r in sorted(cents.collect(), key=lambda r: r["cent_id"])])
+    for r in rows:
+        sims = _normalize(C) @ _normalize(r["embedding"])
+        assert r["cent_id"] == int(np.argmax(sims))
