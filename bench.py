@@ -993,7 +993,7 @@ def main() -> None:
             # Not a timing: reported under "accuracy" (+ query_meta), never
             # summed into the headline seconds.
             from semantic_vector_search_system_spark.operators.similarity import (
-                ivf_topk_fast,
+                ivf_topk,
             )
 
             k_rec, n_rec_q = 10, 20
@@ -1009,7 +1009,7 @@ def main() -> None:
             recall_by_nprobe = {}
             for nprobe in (1, 2, 4, 8):
                 approx: dict = {}
-                for r in ivf_topk_fast(
+                for r in ivf_topk(
                     rq, dvec, cents, k=k_rec, nprobe=nprobe, doc_lists=dl
                 ).collect():
                     approx.setdefault(r["qid"], set()).add(r["docid"])
@@ -1086,7 +1086,7 @@ def main() -> None:
                 # is exactly what this ladder exists to contrast against.
                 for nprobe in (4, 8, 16):
                     out[f"nprobe={nprobe}"] = _recall(
-                        ivf_topk_fast(
+                        ivf_topk(
                             rq, dvec, cents, k=k_rec, nprobe=nprobe,
                             doc_lists=dl, predicate=preds[0.1],
                             selectivity=1.0,
@@ -1111,7 +1111,7 @@ def main() -> None:
                     for base in (2, 4):
                         eff = effective_nprobe(base, sel, max_nprobe=64)
                         rec = _recall(
-                            ivf_topk_fast(
+                            ivf_topk(
                                 rq, dvec, cents, k=k_rec, nprobe=base,
                                 doc_lists=dl, predicate=fpred,
                                 selectivity=sel, max_nprobe=64,
@@ -1290,9 +1290,9 @@ def main() -> None:
             sd_cents = dvec.filter(
                 F.substring("docid", 2, 18).cast("long") < 1024
             ).select(F.col("docid").alias("cent_id"), F.col("vec").alias("cvec"))
-            # r14: assign="inline" (scalar-UDF struct on the carried row)
-            # replaced the skinny-assign + JVM vec-join transport —
-            # parity-tested against the oracle form
+            # r14: the inline assignment (scalar-UDF struct on the carried
+            # row) replaced the skinny-assign + JVM vec-join transport —
+            # pinned against numpy and a Python oracle
             # (tests/test_dedup_textanalysis.py::
             # test_semdedup_inline_strategy_parity_and_single_exchange);
             # interleaved 1M A/B under load: vec-join {113, 81, 31} s vs
@@ -1301,8 +1301,7 @@ def main() -> None:
             # ONE Exchange total.
             sd_plan = semdedup(
                 dvec, sd_cents, threshold=0.99, keep="far",
-                id_col="docid", vec_col="vec", assign="inline",
-                score_dtype="float32",
+                id_col="docid", vec_col="vec", score_dtype="float32",
             )
             timings[f"semdedup_{n}_docs"], spread = best_of(
                 lambda: sd_plan.write.format("noop").mode("overwrite").save(),

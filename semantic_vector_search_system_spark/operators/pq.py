@@ -369,7 +369,7 @@ def ivfpq_topk_expr(
     Stages (each mirrors the fast/numpy path's math):
 
     1. IVF assignment: cosine argmax against the broadcast centroids,
-       ties to the smaller cent_id (the ``ivf_assign`` rule).
+       ties to the smaller cent_id (the ``ivf_topk`` rule).
     2. Residuals ``rv = v - cvec(assigned)`` — classic IVFADC (Jégou et
        al. 2011 §IV): codes quantize the residual, not the raw vector.
     3. Residual codebook: :func:`pq_codebook_first_k` over the residual

@@ -1,17 +1,20 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
 * :func:`cosine_self_join` — all-pairs cosine >= threshold (embedding
-  near-dup detection). Physical shape: the smaller relation is collected to a
-  broadcast numpy matrix; the big side streams through ``mapInPandas`` doing
-  one BLAS matmul per Arrow batch and emitting only surviving pairs. At
-  100 TB the broadcast side must itself be blocked — see
-  :func:`blocked_pairs_note` — but the per-block kernel is this same map.
+  near-dup detection) for explicitly bounded relations. Physical shape:
+  the relation is collected to a broadcast numpy matrix; the big side
+  streams through ``mapInPandas`` doing one BLAS matmul per Arrow batch and
+  emitting only surviving pairs.
+* :func:`cosine_neardup_bucketed` — the scale default for embedding
+  near-dup: banded sign-random-projection LSH (:func:`banded_sign_buckets`,
+  deterministic hyperplanes derived from stable_hash64, so buckets are
+  reproducible across engines and runs) gives candidate pairs at O(n)
+  shuffle instead of O(n^2) compare, then exact cosine verifies them.
 * brute-force top-k lives in operators/search.py (shared with the reference's
-  query path).
-* :func:`lsh_bucket_candidates` — sign-random-projection LSH over the
-  embedding column: deterministic hyperplanes derived from stable_hash64, so
-  buckets are reproducible across engines and runs. Bucket equi-join gives
-  candidate pairs at O(n) shuffle instead of O(n^2) compare.
+  query path); IVF approximate top-k is :func:`ivf_topk` (in-memory
+  relations) and :func:`ivf_search_partitioned` (a ``cent_id``-partitioned
+  parquet index).
+* SemDeDup (:func:`semdedup`) — per-cluster semantic pruning.
 """
 
 from __future__ import annotations
@@ -21,14 +24,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import stable_hash64
-from ..functions.vectors import (
-    dot_product,
-    l2_norm,
-    normalize_rows,
-    topn_sel,
-    unit_rows,
-)
+from ..functions.vectors import normalize_rows, topn_sel, unit_rows
 
 
 def cosine_self_join(
@@ -89,40 +85,6 @@ def cosine_self_join(
             )
 
     return emb.select(id_col, vec_col).mapInPandas(score, schema=schema)
-
-
-def random_projection_signs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    seed: int = 7,
-) -> DataFrame:
-    """Sign-random-projection LSH bucket per row: ``(id, bucket)``.
-
-    Hyperplane p (p in [0, num_planes)) component j is a deterministic
-    pseudo-random value in [-0.5, 0.5) derived from stable_hash64(seed:p:j) —
-    identical on any engine, so bucket assignments are reproducible. Bucket
-    = integer whose bit p is sign(v . plane_p).
-    """
-    dim = len(emb.select(vec_col).first()[0])
-    planes = []
-    from ..functions.hashing import stable_hash64_py
-
-    denom = float(1 << 60)
-    for p in range(num_planes):
-        planes.append(
-            [stable_hash64_py(f"{seed}:{p}:{j}") / denom - 0.5 for j in range(dim)]
-        )
-
-    plane_cols = [
-        F.array(*[F.lit(float(x)) for x in plane]) for plane in planes
-    ]
-    bucket = None
-    for p, plane in enumerate(plane_cols):
-        bit = F.when(dot_product(F.col(vec_col), plane) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return emb.select(F.col(id_col), bucket.cast("long").alias("bucket"))
 
 
 def train_ivf_centroids(
@@ -405,39 +367,6 @@ def ivf_retrain_index(
     return cents
 
 
-def ivf_assign(
-    emb: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_id_col: str = "cent_id",
-    cent_vec_col: str = "cvec",
-    nprobe: int = 1,
-) -> DataFrame:
-    """IVF list assignment: each vector's ``nprobe`` nearest centroids by
-    cosine — ``(id, cent_id, cent_rank)`` rows.
-
-    Centroids are a tiny broadcast relation; assignment is a broadcast
-    cross join + per-id window argmax — a narrow map + one small shuffle
-    keyed by id, O(n * n_centroids) work, no O(n^2).
-    """
-    from pyspark.sql import Window
-
-    from ..functions.vectors import cosine_similarity
-
-    scored = (
-        emb.select(id_col, vec_col)
-        .crossJoin(F.broadcast(centroids.select(cent_id_col, cent_vec_col)))
-        .withColumn("sim", cosine_similarity(vec_col, cent_vec_col))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("sim"), F.asc(cent_id_col))
-    return (
-        scored.withColumn("cent_rank", F.row_number().over(w))
-        .filter(F.col("cent_rank") <= nprobe)
-        .select(id_col, cent_id_col, "cent_rank")
-    )
-
-
 def _with_eff(df, nprobe: int):
     """Attach the resolved probe count as ``df.eff_nprobe`` (r10 VERDICT
     #7: callers/benches read which nprobe the auto path actually used —
@@ -515,85 +444,6 @@ def estimate_selectivity(
     return max(m, 1) / n
 
 
-def ivf_topk(
-    queries: DataFrame,
-    emb: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    id_col: str = "docid",
-    vec_col: str = "vec",
-    predicate=None,
-    selectivity: float | None = None,
-    max_nprobe: int | None = None,
-) -> DataFrame:
-    """IVF approximate top-k: probe the query's ``nprobe`` nearest inverted
-    lists, exact cosine only within them.
-
-    The scale path for ANN when the corpus exceeds brute-force budget:
-    candidate volume drops to ~``nprobe/n_centroids`` of the corpus, the
-    doc-side join is an equi-join on ``cent_id`` (shuffle-partitioned, never
-    a cross join). Deterministic given deterministic centroids.
-
-    ``predicate`` (a boolean Column over ``emb``'s metadata columns) turns
-    this into FILTERED ANN with pre-filter semantics — the classic
-    "filtered vector search" shape (per-tenant corpora, language/date
-    restrictions): matching docs are selected BEFORE list membership, so
-    the result is the exact top-k of the filtered corpus *within the
-    probed lists* (never the post-filter trap of retrieving k then
-    filtering below k).  The filter lands on the corpus scan — Catalyst
-    pushes it into the parquet reader — and per-doc list assignment is
-    filter-invariant, so only surviving docs are ever assigned or scored.
-    Recall caveat at high selectivity: a sparse filter thins each probed
-    list, so hit-k recall needs ``nprobe`` scaled roughly with 1/selectivity
-    (the same ladder ann_recall measures, filtered).  The probe count
-    auto-widens via :func:`effective_nprobe` to restore the unfiltered
-    scored-vector budget; ``max_nprobe`` caps the widening.  When a
-    predicate is given and ``selectivity`` is None (r10 VERDICT #7), it
-    is ESTIMATED from a deterministic content-hash sample
-    (:func:`estimate_selectivity` with ``hash_col=id_col``) — the
-    stats-table escape hatch is passing ``selectivity=`` explicitly.
-    The probe count actually used is recorded on the returned DataFrame
-    as the ``eff_nprobe`` attribute.
-    """
-    from pyspark.sql import Window
-
-    from ..functions.vectors import cosine_similarity
-
-    if predicate is not None:
-        if selectivity is None:
-            selectivity = estimate_selectivity(
-                emb, predicate, hash_col=id_col
-            )
-        emb = emb.filter(predicate)
-        nprobe = effective_nprobe(nprobe, selectivity, max_nprobe)
-    doc_lists = ivf_assign(
-        emb, centroids, id_col=id_col, vec_col=vec_col, nprobe=1
-    ).select(id_col, "cent_id")
-    q_lists = ivf_assign(
-        queries, centroids, id_col=qid_col, vec_col=qvec_col, nprobe=nprobe
-    ).select(qid_col, "cent_id")
-
-    docs_with_list = emb.select(id_col, vec_col).join(doc_lists, id_col)
-    cands = (
-        queries.select(qid_col, qvec_col)
-        .join(q_lists, qid_col)
-        .join(docs_with_list, "cent_id")
-    )
-    scored = cands.withColumn("score", cosine_similarity(qvec_col, vec_col))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
-    # a doc can enter via multiple probed lists only if it tied across
-    # centroids (impossible with nprobe=1 doc assignment) — no dedup path
-    return _with_eff(
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, id_col, "rank", "score"),
-        nprobe,
-    )
-
-
 def ivf_assign_fast(
     emb: DataFrame,
     centroids: DataFrame,
@@ -603,13 +453,13 @@ def ivf_assign_fast(
     cent_vec_col: str = "cvec",
     nprobe: int = 1,
 ) -> DataFrame:
-    """BLAS twin of :func:`ivf_assign` for corpora where the HOF cosine is
-    interpretation-bound (~1M+ rows x hundreds of dims): the tiny centroid
-    relation is collected once and broadcast as a normalized matrix; each
-    Arrow batch scores with ONE matmul and takes its ``nprobe`` best lists
-    (ties broken ascending cent_id like the window form). Same logical
-    output ``(id, cent_id, cent_rank)``; float64 arithmetic, so any
-    divergence from :func:`ivf_assign` is confined to near-exact ties."""
+    """IVF list assignment: each vector's ``nprobe`` nearest centroids by
+    cosine — ``(id, cent_id, cent_rank)`` rows; :func:`ivf_topk` runs it
+    on both sides (docs at ``nprobe=1``).  The tiny centroid relation is
+    collected once and broadcast as a normalized matrix; each Arrow batch
+    scores with ONE float64 matmul and takes its ``nprobe`` best lists,
+    ties broken ascending cent_id (the DuckDB-oracle ordering).  A narrow
+    map: no join, no shuffle."""
     import numpy as np
     import pandas as pd
 
@@ -711,7 +561,7 @@ def _broadcast_centroids(
     )
 
 
-def ivf_topk_fast(
+def ivf_topk(
     queries: DataFrame,
     emb: DataFrame,
     centroids: DataFrame,
@@ -726,37 +576,49 @@ def ivf_topk_fast(
     selectivity: float | None = None,
     max_nprobe: int | None = None,
 ) -> DataFrame:
-    """BLAS IVF top-k — the large-corpus physical strategy behind
-    :func:`ivf_topk`'s logical plan.
+    """IVF approximate top-k: probe the query's ``nprobe`` nearest inverted
+    lists, exact cosine only within them — ``(qid, docid, rank, score)``,
+    ranked by (score desc, docid asc).  Each doc lives in the list of its
+    nearest centroid (ties to the smaller cent_id).  Deterministic given
+    deterministic centroids.
 
-    ``predicate`` — filtered-ANN pre-filter semantics, identical contract
-    to :func:`ivf_topk`: the boolean Column filters ``emb`` before
-    assignment/scoring (pushed to the scan); with a prebuilt ``doc_lists``
-    the equi-join against the filtered corpus applies the same restriction.
-    ``selectivity``/``max_nprobe`` — the :func:`effective_nprobe`
-    probe-widening rule, same contract as :func:`ivf_topk`.
+    The scale path for ANN when the corpus exceeds brute-force budget:
+    candidate volume drops to ~``nprobe/n_lists`` of the corpus and every
+    join is an equi-join on ``cent_id`` (never a cross join).  Shape:
+    assignment is a narrow matmul stage per side (:func:`ivf_assign_fast`);
+    then docs and queries are COGROUPED by inverted list and each list
+    scores with one ``Q_list @ D_list.T`` matmul inside ``applyInPandas``
+    (:func:`_cogroup_list_topk`) — only per-list partial top-k rows
+    (``O(n_lists * queries_probing * k)``) reach the final per-query window
+    merge, and the hot shuffle moves each doc vector exactly once.  At
+    100 TB: pre-partition the corpus by ``cent_id`` at index build time
+    and serve with :func:`ivf_search_partitioned`.
 
     ``doc_lists`` (``(id, cent_id)``) lets a caller reuse a prebuilt
     index assignment — the IVF analog of loading a built index before the
     query loop; serving-path benchmarks time search without re-assigning
     the corpus every call.
 
-    Shape: assignment is a narrow matmul stage per side
-    (:func:`ivf_assign_fast`); then docs and queries are COGROUPED by
-    inverted list (``cent_id``) and each list scores with one
-    ``Q_list @ D_list.T`` matmul inside ``applyInPandas`` — per-list
-    partial top-k rows only (``O(n_lists * queries_probing * k)``) reach
-    the final per-query window merge. Candidate volume is
-    ``~nprobe/n_lists`` of the corpus; every join is an equi-join on
-    ``cent_id``; the hot shuffle moves each doc vector exactly once.
-    At 100 TB: pre-partition/bucket the corpus by ``cent_id`` at index
-    build time and the per-query cost is a handful of list-local matmuls.
+    ``predicate`` (a boolean Column over ``emb``'s metadata columns) turns
+    this into FILTERED ANN with pre-filter semantics — the classic
+    "filtered vector search" shape (per-tenant corpora, language/date
+    restrictions): matching docs are selected BEFORE list membership, so
+    the result is the exact top-k of the filtered corpus *within the
+    probed lists* (never the post-filter trap of retrieving k then
+    filtering below k).  The filter lands on the corpus scan — Catalyst
+    pushes it into the parquet reader — and per-doc list assignment is
+    filter-invariant, so only surviving docs are ever assigned or scored
+    (with a prebuilt ``doc_lists`` the equi-join against the filtered
+    corpus applies the same restriction).  A sparse filter thins each
+    probed list, so the probe count auto-widens via
+    :func:`effective_nprobe` to restore the unfiltered scored-vector
+    budget; ``max_nprobe`` caps the widening.  When a predicate is given
+    and ``selectivity`` is None (r10 VERDICT #7), it is ESTIMATED from a
+    deterministic content-hash sample (:func:`estimate_selectivity` with
+    ``hash_col=id_col``) — the stats-table escape hatch is passing
+    ``selectivity=`` explicitly.  The probe count actually used is
+    recorded on the returned DataFrame as the ``eff_nprobe`` attribute.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
     if predicate is not None:
         if selectivity is None:  # auto path (r10 VERDICT #7)
             selectivity = estimate_selectivity(
@@ -804,13 +666,11 @@ def _cogroup_list_topk(
     emits only its per-query partial top-k; a final per-query window merges
     the partials.  Because the cogroup key IS the probed-list id, a query
     only ever scores docs from lists it probed — exact :func:`ivf_topk`
-    candidate semantics by construction (shared by :func:`ivf_topk_fast`
+    candidate semantics by construction (shared by :func:`ivf_topk`
     and :func:`ivf_search_partitioned`; extracted after r4 ADVICE flagged
     the latter's union-of-lists divergence)."""
     import numpy as np
     import pandas as pd
-
-    from pyspark.sql import Window
 
     schema = f"`{qid_col}` {qid_t}, `{id_col}` {id_t}, score double"
 
@@ -1181,8 +1041,6 @@ def ivf_search_partitioned(
                 }
             )
 
-    from pyspark.sql import Window
-
     partial = docs.mapInPandas(score, schema=schema)
     if merge == "driver":
         import heapq
@@ -1377,27 +1235,6 @@ def cosine_neardup_bucketed(
     return joined.mapInPandas(verify, schema=schema)
 
 
-def lsh_bucket_candidates(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    seed: int = 7,
-) -> DataFrame:
-    """Candidate pairs from shared LSH bucket: ``(id_a, id_b)`` distinct, a<b.
-
-    O(n) shuffle on bucket; follow with exact cosine verification on the
-    candidate set (cosine_self_join on the restricted relation or the
-    expression form for small candidate counts).
-    """
-    sb = random_projection_signs(emb, id_col, vec_col, num_planes, seed)
-    a = sb.select(F.col(id_col).alias("id_a"), "bucket")
-    b = sb.select(F.col(id_col).alias("id_b"), "bucket")
-    return (
-        a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b").distinct()
-    )
-
-
 # --------------------------------------------------------------------------
 # SemDeDup — semantic deduplication via clustered embedding pruning
 # (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -1408,38 +1245,6 @@ def lsh_bucket_candidates(
 # pruning is pairwise ONLY within a cluster, so total compare cost is
 # n * (n/k) * dim instead of n^2 * dim (minimized at k ~ sqrt(n)).
 # --------------------------------------------------------------------------
-
-
-def semdedup_assign(
-    emb: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_id_col: str = "cent_id",
-    cent_vec_col: str = "cvec",
-) -> DataFrame:
-    """Nearest-centroid assignment KEEPING the similarity: ``(id, cent_id,
-    cent_sim)`` — :func:`ivf_assign` (nprobe=1) plus the winning cosine,
-    which SemDeDup's keep-policy orders on.
-
-    Declarative form: broadcast cross join + window argmax (ties broken
-    ascending cent_id, exactly the ivf_assign / DuckDB-oracle ordering).
-    """
-    from pyspark.sql import Window
-
-    from ..functions.vectors import cosine_similarity
-
-    scored = (
-        emb.select(id_col, vec_col)
-        .crossJoin(F.broadcast(centroids.select(cent_id_col, cent_vec_col)))
-        .withColumn("cent_sim", cosine_similarity(vec_col, cent_vec_col))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cent_sim"), F.asc(cent_id_col))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select(id_col, cent_id_col, "cent_sim")
-    )
 
 
 def semdedup_assign_inline(
@@ -1457,11 +1262,10 @@ def semdedup_assign_inline(
     ``ivf_assign_inline`` minimum-data-motion shape with the cent_sim
     SemDeDup's keep-order needs.
 
-    Output ``(id, cent_id, cent_sim, vec)``: the BLAS twin of
-    :func:`semdedup_assign` plus the carried vector — one matmul per
-    Arrow batch against the broadcast unit centroid matrix, argmax ties
-    broken ascending cent_id, float64 by default so divergence from the
-    window form is confined to near-exact ties (parity-tested).
+    Output ``(id, cent_id, cent_sim, vec)``: each row's nearest centroid,
+    the winning cosine and the carried vector — one matmul per Arrow
+    batch against the broadcast unit centroid matrix, argmax ties broken
+    ascending cent_id (the DuckDB-oracle ordering), float64 by default.
     ``score_dtype="float32"`` runs the matmul in single precision on the
     natively-float32 Arrow batch (no upcast pass).  Null vectors score as
     zero vectors (cosine 0 with everything: assigned to the lowest
@@ -1635,7 +1439,6 @@ def semdedup(
     vec_col: str = "embedding",
     cent_id_col: str = "cent_id",
     cent_vec_col: str = "cvec",
-    assign: str = "expr",
     block_rows: int = 2048,
     emit_vec: bool = False,
     score_dtype: str = "float64",
@@ -1666,16 +1469,13 @@ def semdedup(
       * ``"min_id"``: order (id asc) — deterministic baseline matching the
         keep-one convention of the MinHash pipelines.
 
-    Physical shape, ``assign`` in {``"expr"``, ``"inline"``}:
-    ``"expr"`` (the declarative/oracle form) is broadcast-cross-join +
-    window assignment joined back to the vectors; ``"inline"`` (r14, the
-    catalog and bench path) computes (cent_id, cent_sim) as a scalar-UDF
+    Physical shape: (cent_id, cent_sim) is computed as a scalar-UDF
     struct on the CARRIED row (:func:`semdedup_assign_inline`) — no Arrow
     re-encode OUT of Python and no rejoin, so the ONLY Exchange in the
     plan is the cent_id group shuffle (plan-gated) and the vectors cross
-    the network once (parity-tested vs ``"expr"``). The kernel runs the
-    triangular max as tiled BLAS (block_rows x block_rows tiles), so memory is
-    O(block^2 + b*dim) per cluster, never O(b^2). Cluster size is the
+    the network once. The kernel runs the triangular max as tiled BLAS
+    (block_rows x block_rows tiles), so memory is O(block^2 + b*dim) per
+    cluster, never O(b^2). Cluster size is the
     bounded unit — pick k ~ sqrt(n) (paper: fixed k ~ 11k at web scale) so
     per-cluster cost stays flat as the corpus grows; the hot path is
     n*(n/k)*dim BLAS flops spread over one task per cluster.
@@ -1692,19 +1492,11 @@ def semdedup(
     import pandas as pd
 
     if keep not in ("far", "min_id"):
-        raise ValueError(f"semdedup: unknown keep policy {keep!r}")
-    if assign == "inline":
-        rows = semdedup_assign_inline(
-            emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col,
-            score_dtype=score_dtype,
-        )
-    elif assign == "expr":
-        asg = semdedup_assign(
-            emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col
-        )
-        rows = emb.select(id_col, vec_col).join(asg, id_col)
-    else:
-        raise ValueError(f"semdedup: unknown assign {assign!r} (expr|inline)")
+        raise ValueError(f"semdedup: unknown keep {keep!r} (far|min_id)")
+    rows = semdedup_assign_inline(
+        emb, centroids, id_col, vec_col, cent_id_col, cent_vec_col,
+        score_dtype=score_dtype,
+    )
 
     dt = dict(emb.dtypes)
     id_t, vec_t = dt[id_col], dt[vec_col]
@@ -1813,7 +1605,7 @@ def write_semdedup_index(
     n_buckets: int = 32,
 ) -> dict:
     """Build and PERSIST the incremental-SemDeDup corpus state: runs the
-    ``assign="inline"`` keep="min_id" pipeline over the corpus and stores
+    keep="min_id" :func:`semdedup` pipeline over the corpus and stores
 
     * ``<prefix>_members`` — EVERY corpus row ``(id, cent_id, cent_sim,
       kept, vec)`` as a ``bucketBy(n_buckets, cent_id)`` warehouse table:
@@ -1835,7 +1627,7 @@ def write_semdedup_index(
     spark = emb.sparkSession
     res = semdedup(
         emb, centroids, threshold=threshold, keep="min_id",
-        id_col=id_col, vec_col=vec_col, assign="inline", emit_vec=True,
+        id_col=id_col, vec_col=vec_col, emit_vec=True,
     )
     (
         res.write.mode("overwrite").format("parquet")

@@ -1448,8 +1448,9 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ALL 20 r11-green tranche-2 parks return (4 rounds since their r11
 # driver check), plus the two rows whose faces CHANGED this round and
 # must be driver-verified on the benched code: semdedup_keep_one (now
-# assign="inline" — the r14 bench face; row-parity pytest-pinned, hash
-# verified unmoved at sf0.001/sf0.01) and span_dedup (r12-green park,
+# the inline scalar-UDF assignment — the r14 bench face and, since the
+# window assignment was deleted, semdedup's only face; hash verified
+# unmoved at sf0.001/sf0.01) and span_dedup (r12-green park,
 # returning with this round's chunker change).  quality_classifier_report
 # (now strategy="fast") was already in-window and stays.  In exchange 22
 # r14-green rows park, each with family coverage in the r15 window
@@ -4459,23 +4460,20 @@ def semdedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     Beyond the reference surface (its embedding dedup is the all-pairs
     threshold loop, embeddings/search.py): clustering bounds the compare
     set per task, n*(n/k)*dim total flops — the form that survives web
-    scale. Physical shape (r15; r14 VERDICT "Next #3"): the row runs
-    ``assign="inline"`` — the SAME face the bench times — so the
-    driver's DuckDB hash verifies the benched code: scalar-UDF struct
-    assignment on the carried row, then ONE cent_id-keyed shuffle into
-    the tiled-BLAS grouped kernel (operators/similarity.py::semdedup).
-    Parity with the expr (oracle) face — cent_id and kept exact,
-    cent_sim within float tolerance — is pytest-pinned at both scoring
-    dtypes (test_dedup_textanalysis.py::
-    test_semdedup_inline_strategy_parity_and_single_exchange), so the
-    hash must not move — verified at sf0.001/sf0.01 before the flip."""
+    scale. Physical shape: the row runs semdedup's one face — the SAME
+    one the bench times — so the DuckDB oracle hash verifies the
+    benched code: scalar-UDF struct assignment on the carried row, then
+    ONE cent_id-keyed shuffle into the tiled-BLAS grouped kernel
+    (operators/similarity.py::semdedup).  Assignment (cent_id exact,
+    cent_sim within float tolerance) is pytest-pinned against numpy at
+    both scoring dtypes and the keep decision against a Python oracle
+    (test_dedup_textanalysis.py::
+    test_semdedup_inline_strategy_parity_and_single_exchange)."""
     emb = T(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
-    out = sim.semdedup(
-        emb, cents, threshold=0.32, keep="far", assign="inline"
-    )
+    out = sim.semdedup(emb, cents, threshold=0.32, keep="far")
     return out.withColumn("cent_sim", F.round("cent_sim", 4))
 
 

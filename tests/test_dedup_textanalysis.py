@@ -92,18 +92,6 @@ def test_cosine_self_join_threshold(spark):
     assert pairs[(1, 2)] > 0.99
 
 
-def test_lsh_bucket_candidates_find_near_dup(spark):
-    rows = [
-        (1, [1.0, 0.2, -0.3, 0.5]),
-        (2, [1.0, 0.21, -0.29, 0.5]),  # near-dup of 1
-        (3, [-1.0, 0.9, 0.4, -0.7]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             sim.lsh_bucket_candidates(emb, num_planes=8).collect()}
-    assert (1, 2) in pairs
-
-
 def test_cosine_neardup_bucketed_precision_and_recall(spark):
     """Every emitted pair must appear in the exact all-pairs result with the
     same rounded cosine (precision exact); true near-dups (cos>=0.99) must
@@ -658,44 +646,49 @@ def test_connected_components_driver_and_iterative_agree(spark):
     assert all(min(v) == c for c, v in comps.items())
 
 
-def test_ivf_topk_fast_matches_hof_form(spark):
-    """The BLAS cogroup IVF (ivf_topk_fast) must return the same ranked
-    lists as the declarative HOF form on identical centroids/nprobe — same
-    logical plan, different physical strategy (r4 scale path)."""
-    import pyspark.sql.functions as F
-    from semantic_vector_search_system_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_fast,
-    )
+def _unit_rows(df, id_col, vec_col):
+    """Collect ``(id, vec)`` rows sorted by id: ``(ids, unit float64 rows)``."""
+    import numpy as np
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
-    )
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    d = emb.select(F.col("vec_id").alias("docid"), F.col("embedding").alias("vec"))
-    hof = {
-        (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
-        for r in ivf_topk(q, d, cents, k=5, nprobe=2).collect()
-    }
-    blas = {
-        (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
-        for r in ivf_topk_fast(q, d, cents, k=5, nprobe=2).collect()
-    }
-    assert hof == blas
+    rows = sorted(df.select(id_col, vec_col).collect(), key=lambda r: r[0])
+    X = np.array([r[1] for r in rows], dtype=np.float64)
+    n = np.linalg.norm(X, axis=1, keepdims=True)
+    return [r[0] for r in rows], X / np.where(n > 0, n, 1.0)
+
+
+def _ivf_reference(q, d, cents, k, nprobe):
+    """Numpy IVF top-k: each doc sits in its best centroid's list (ties to
+    the lower cent_id), each query probes its top-``nprobe`` lists, exact
+    cosine within them, ranked by (score desc, docid asc) —
+    ``{(qid, rank): (docid, round(score, 6))}``, the key the tests compare."""
+    import numpy as np
+
+    cids, C = _unit_rows(cents, "cent_id", "cvec")
+    dids, D = _unit_rows(d, "docid", "vec")
+    qids, Q = _unit_rows(q, "qid", "qvec")
+    doc_list = np.argmax(D @ C.T, axis=1)  # first max = lower cent_id
+    S = Q @ D.T
+    out = {}
+    for i, (qid, qs) in enumerate(zip(qids, Q @ C.T)):
+        probed = sorted(range(len(cids)), key=lambda c: (-qs[c], cids[c]))
+        members = np.flatnonzero(np.isin(doc_list, probed[:nprobe]))
+        cand = sorted(
+            ((float(S[i, j]), dids[j]) for j in members),
+            key=lambda t: (-t[0], t[1]),
+        )
+        for rank, (score, did) in enumerate(cand[:k], 1):
+            out[(qid, rank)] = (did, round(score, 6))
+    return out
 
 
 def test_ivf_search_partitioned_prunes_and_matches(spark, tmp_path):
     """IVF serving against a cent_id-partitioned parquet index: results
-    equal the declarative ivf_topk (same lists probed, exact cosine within
+    equal the numpy IVF reference (same lists probed, exact cosine within
     them) and the scan's partition filters prune to the probed lists."""
     import pyspark.sql.functions as F
     from semantic_vector_search_system_spark.operators.similarity import (
         ivf_assign_fast,
         ivf_search_partitioned,
-        ivf_topk,
     )
     from semantic_vector_search_system_spark.sources.parquet_index import (
         write_vector_index,
@@ -716,10 +709,7 @@ def test_ivf_search_partitioned_prunes_and_matches(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     served = ivf_search_partitioned(spark, idx, cents, q, k=5, nprobe=2)
-    expected = {
-        (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
-        for r in ivf_topk(q, d, cents, k=5, nprobe=2).collect()
-    }
+    expected = _ivf_reference(q, d, cents, k=5, nprobe=2)
     got = {
         (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
         for r in served.collect()
@@ -745,7 +735,6 @@ def test_ivf_search_partitioned_per_query_lists(spark, tmp_path):
     from semantic_vector_search_system_spark.operators.similarity import (
         ivf_assign_fast,
         ivf_search_partitioned,
-        ivf_topk,
     )
     from semantic_vector_search_system_spark.sources.parquet_index import (
         write_vector_index,
@@ -773,11 +762,8 @@ def test_ivf_search_partitioned_per_query_lists(spark, tmp_path):
     rows = ivf_search_partitioned(spark, idx, cents, q, k=2, nprobe=1).collect()
     got = {(r["qid"], r["docid"]) for r in rows}
     assert got == {("qa", "da"), ("qb", "dc"), ("qb", "db")}
-    # and exact parity with the declarative form on the same inputs
-    expected = {
-        (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
-        for r in ivf_topk(q, d, cents, k=2, nprobe=1).collect()
-    }
+    # and exact parity with the numpy reference on the same inputs
+    expected = _ivf_reference(q, d, cents, k=2, nprobe=1)
     served = {
         (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6)) for r in rows
     }
@@ -793,7 +779,7 @@ def test_ivf_fast_empty_edges(spark, tmp_path):
     from semantic_vector_search_system_spark.operators.similarity import (
         ivf_assign_fast,
         ivf_search_partitioned,
-        ivf_topk_fast,
+        ivf_topk,
     )
     from semantic_vector_search_system_spark.sources.parquet_index import (
         write_vector_index,
@@ -811,7 +797,7 @@ def test_ivf_fast_empty_edges(spark, tmp_path):
     no_q = emb.filter(F.lit(False)).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    assert ivf_topk_fast(no_q, d, cents, k=3, nprobe=2).count() == 0
+    assert ivf_topk(no_q, d, cents, k=3, nprobe=2).count() == 0
 
     dl = ivf_assign_fast(d, cents, id_col="docid", vec_col="vec", nprobe=1).select(
         "docid", "cent_id"
@@ -824,18 +810,17 @@ def test_ivf_fast_empty_edges(spark, tmp_path):
 
 
 def test_ivf_fast_parity_fuzz_shapes(spark, tmp_path):
-    """Randomized-shape parity: the BLAS cogroup IVF AND the
-    partition-pruned serving path equal the HOF form across dim /
-    list-count / nprobe combinations (seeded numpy vectors, well-spread so
-    near-exact centroid ties don't flip assignments).  Multi-query cases
-    make this the structural guard for the r5 per-query-lists fix — under
-    the old union-of-lists serving semantics these shapes diverge."""
+    """Randomized-shape parity: the cogroup IVF AND the partition-pruned
+    serving path equal the numpy IVF reference across dim / list-count /
+    nprobe combinations (seeded numpy vectors, well-spread so near-exact
+    centroid ties don't flip assignments).  Multi-query cases make this
+    the structural guard for the r5 per-query-lists fix — under the old
+    union-of-lists serving semantics these shapes diverge."""
     import numpy as np
     from semantic_vector_search_system_spark.operators.similarity import (
         ivf_assign_fast,
         ivf_search_partitioned,
         ivf_topk,
-        ivf_topk_fast,
     )
     from semantic_vector_search_system_spark.sources.parquet_index import (
         write_vector_index,
@@ -860,15 +845,12 @@ def test_ivf_fast_parity_fuzz_shapes(spark, tmp_path):
             [(i, [float(x) for x in M[i]]) for i in range(0, n_docs, 17)],
             "qid bigint, qvec array<double>",
         )
-        hof = {
+        ref = _ivf_reference(q, d, cents, k=k, nprobe=nprobe)
+        got = {
             (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
             for r in ivf_topk(q, d, cents, k=k, nprobe=nprobe).collect()
         }
-        blas = {
-            (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
-            for r in ivf_topk_fast(q, d, cents, k=k, nprobe=nprobe).collect()
-        }
-        assert hof == blas, (dim, n_cents, nprobe)
+        assert got == ref, (dim, n_cents, nprobe)
 
         dl = ivf_assign_fast(
             d, cents, id_col="docid", vec_col="vec", nprobe=1
@@ -893,7 +875,7 @@ def test_ivf_fast_parity_fuzz_shapes(spark, tmp_path):
                     merge=merge, **kwargs,
                 ).collect()
             }
-            assert served == hof, (dim, n_cents, nprobe, strat, merge, pre_q)
+            assert served == ref, (dim, n_cents, nprobe, strat, merge, pre_q)
 
 
 def test_star_candidates_hot_bucket_linear_not_quadratic(spark):
@@ -970,7 +952,7 @@ def test_ivf_recall_floor_at_bench_geometry(spark):
     )
     from semantic_vector_search_system_spark.operators.similarity import (
         ivf_assign_fast,
-        ivf_topk_fast,
+        ivf_topk,
     )
 
     enc = HashingEncoderFast(dim=512)
@@ -997,7 +979,7 @@ def test_ivf_recall_floor_at_bench_geometry(spark):
     recalls = {}
     for nprobe in (1, 2, 4, 8):
         approx: dict = {}
-        for r in ivf_topk_fast(
+        for r in ivf_topk(
             qvec, dvec, cents, k=k, nprobe=nprobe, doc_lists=dl
         ).collect():
             approx.setdefault(r["qid"], set()).add(r["docid"])
@@ -1021,7 +1003,7 @@ def test_ivf_recall_floor_at_bench_geometry(spark):
         .cache()
     )
     kapprox: dict = {}
-    for r in ivf_topk_fast(
+    for r in ivf_topk(
         qvec, dvec, kcents, k=k, nprobe=1, doc_lists=kdl
     ).collect():
         kapprox.setdefault(r["qid"], set()).add(r["docid"])
@@ -1086,7 +1068,7 @@ def test_filtered_ivf_auto_nprobe_restores_budget_parity(spark):
         topk_bruteforce,
     )
     from semantic_vector_search_system_spark.operators.similarity import (
-        ivf_topk_fast,
+        ivf_topk,
     )
 
     enc = HashingEncoderFast(dim=512)
@@ -1118,18 +1100,18 @@ def test_filtered_ivf_auto_nprobe_restores_budget_parity(spark):
     for r in topk_bruteforce(qvec, dvec.filter(pred), k=k).collect():
         exact_f.setdefault(r["qid"], set()).add(r["docid"])
 
-    r_unf = recall(ivf_topk_fast(qvec, dvec, cents, k=k, nprobe=2), exact_unf)
+    r_unf = recall(ivf_topk(qvec, dvec, cents, k=k, nprobe=2), exact_unf)
     # selectivity=1.0 pins the OLD fixed-probe behavior (no widening) —
     # since r11 a bare predicate auto-estimates selectivity instead
     r_fixed = recall(
-        ivf_topk_fast(
+        ivf_topk(
             qvec, dvec, cents, k=k, nprobe=2, predicate=pred,
             selectivity=1.0,
         ),
         exact_f,
     )
     r_auto = recall(
-        ivf_topk_fast(
+        ivf_topk(
             qvec, dvec, cents, k=k, nprobe=2, predicate=pred,
             selectivity=0.1, max_nprobe=64,
         ),
@@ -1139,7 +1121,7 @@ def test_filtered_ivf_auto_nprobe_restores_budget_parity(spark):
     # no selectivity= estimates it from a deterministic content-hash
     # sample and widens the probe; the resolved count is recorded on the
     # result as .eff_nprobe
-    auto_df = ivf_topk_fast(
+    auto_df = ivf_topk(
         qvec, dvec, cents, k=k, nprobe=2, predicate=pred, max_nprobe=64
     )
     assert getattr(auto_df, "eff_nprobe", None) is not None
@@ -1466,6 +1448,33 @@ def test_incremental_neardup_family_mismatch_fails_loudly(spark):
 # SemDeDup (clustered semantic dedup, Abbas et al. 2023 semantics)
 # ---------------------------------------------------------------------------
 
+def _py_semdedup(ids, Xn, Cn, tau: float, keep: str) -> dict:
+    """Brute-force numpy reference of the full SemDeDup rule over unit
+    rows ``Xn`` and cent_id-ascending unit centroids ``Cn``: argmax
+    assignment with ascending-cent_id ties, per-cluster keep-order,
+    triangular max over ALL earlier members — ``{id: kept}``."""
+    import numpy as np
+
+    ids = np.asarray(ids)
+    S = Xn @ Cn.T
+    # ascending cent_id columns: argmax first-max = lowest-cent_id tie
+    assign = np.argmax(S, axis=1)
+    cent_sim = S[np.arange(len(ids)), assign]
+    kept = {}
+    for c in range(len(Cn)):
+        members = np.where(assign == c)[0]
+        if keep == "far":
+            order = members[np.lexsort((ids[members], cent_sim[members]))]
+        else:
+            order = members[np.argsort(ids[members], kind="stable")]
+        for pos, i in enumerate(order):
+            prior = order[:pos]
+            kept[ids[i].item()] = not (
+                len(prior) and (Xn[prior] @ Xn[i]).max() >= tau
+            )
+    return kept
+
+
 def _angle_vec(theta_deg: float) -> list[float]:
     import math
 
@@ -1495,44 +1504,19 @@ def test_semdedup_far_policy_triangular_chain(spark):
         [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0])],
         "cent_id bigint, cvec array<double>",
     )
-    for mode in ("expr", "inline"):
-        out = {r["vec_id"]: r for r in
-               semdedup(emb, cents, threshold=0.9, keep="far", assign=mode).collect()}
-        # id 3 (40deg) has the LOWEST cent_sim -> first in order -> kept;
-        # id 2 (25deg) within 15deg of 3 -> dropped; id 1 (10deg) is 30deg
-        # from kept 3 but 15deg from DROPPED 2 -> still dropped.
-        assert {i for i, r in out.items() if r["kept"]} == {3, 4}, mode
-        assert out[1]["cent_id"] == 0 and out[4]["cent_id"] == 1
+    out = {r["vec_id"]: r for r in
+           semdedup(emb, cents, threshold=0.9, keep="far").collect()}
+    # id 3 (40deg) has the LOWEST cent_sim -> first in order -> kept;
+    # id 2 (25deg) within 15deg of 3 -> dropped; id 1 (10deg) is 30deg
+    # from kept 3 but 15deg from DROPPED 2 -> still dropped.
+    assert {i for i, r in out.items() if r["kept"]} == {3, 4}
+    assert out[1]["cent_id"] == 0 and out[4]["cent_id"] == 1
 
     # keep="min_id": order by id -> 1 kept, 2 dropped (15deg from 1),
     # 3 dropped (15deg from dropped 2).
     out = {r["vec_id"]: r["kept"] for r in
            semdedup(emb, cents, threshold=0.9, keep="min_id").collect()}
     assert {i for i, k in out.items() if k} == {1, 4}
-
-
-def test_semdedup_expr_fast_parity(spark):
-    """The declarative (oracle) and fast (inline scalar-UDF) forms agree
-    row-for-row on real data: same assignment, same keep decision,
-    cent_sim within float tolerance."""
-    from semantic_vector_search_system_spark.operators.similarity import semdedup
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = emb.filter("vec_id < 8").selectExpr(
-        "vec_id AS cent_id", "embedding AS cvec"
-    )
-    a = {r["vec_id"]: r for r in
-         semdedup(emb, cents, threshold=0.32, keep="far", assign="expr").collect()}
-    b = {r["vec_id"]: r for r in
-         semdedup(emb, cents, threshold=0.32, keep="far", assign="inline").collect()}
-    assert set(a) == set(b) and len(a) == 500
-    for vid in a:
-        assert a[vid]["cent_id"] == b[vid]["cent_id"]
-        assert a[vid]["kept"] == b[vid]["kept"]
-        assert abs(a[vid]["cent_sim"] - b[vid]["cent_sim"]) < 1e-9
-    # the threshold is inside the similarity mass -> both classes present
-    kept = sum(1 for r in a.values() if r["kept"])
-    assert 0 < kept < 500
 
 
 def test_semdedup_matches_python_oracle(spark):
@@ -1551,25 +1535,6 @@ def test_semdedup_matches_python_oracle(spark):
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
     C = Xn[:k].copy()
 
-    def py_semdedup(keep: str) -> dict[int, bool]:
-        S = Xn @ C.T
-        # ascending cent_id columns: argmax first-max = lowest-cent_id tie
-        assign = np.argmax(S, axis=1)
-        cent_sim = S[np.arange(n), assign]
-        kept = {}
-        for c in range(k):
-            ids = np.where(assign == c)[0]
-            if keep == "far":
-                order = ids[np.lexsort((ids, cent_sim[ids]))]
-            else:
-                order = np.sort(ids)
-            for pos, i in enumerate(order):
-                prior = order[:pos]
-                kept[int(i)] = not (
-                    len(prior) and (Xn[prior] @ Xn[i]).max() >= tau
-                )
-        return kept
-
     emb = spark.createDataFrame(
         [(i, [float(x) for x in Xn[i]]) for i in range(n)],
         "vec_id bigint, embedding array<double>",
@@ -1579,26 +1544,12 @@ def test_semdedup_matches_python_oracle(spark):
         "cent_id bigint, cvec array<double>",
     )
     for keep in ("far", "min_id"):
-        expect = py_semdedup(keep)
+        expect = _py_semdedup(np.arange(n), Xn, C, tau, keep)
         got = {r["vec_id"]: r["kept"] for r in
                semdedup(emb, cents, threshold=tau, keep=keep,
-                        assign="inline", block_rows=32).collect()}
+                        block_rows=32).collect()}
         assert got == expect, keep
         assert sum(1 for v in expect.values() if not v) >= 15  # planted dups fired
-
-
-def test_semdedup_fast_form_single_exchange(spark):
-    """100 TB property of the fast (inline) form: the assignment rides on
-    the carried row with no rejoin; the ONLY Exchange in the whole plan is
-    the cent_id group shuffle."""
-    from semantic_vector_search_system_spark.operators.similarity import semdedup
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = emb.filter("vec_id < 8").selectExpr(
-        "vec_id AS cent_id", "embedding AS cvec"
-    )
-    plan = semdedup(emb, cents, threshold=0.32, assign="inline")._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan[:4000]
 
 
 def test_semdedup_null_vector_treated_as_zero(spark):
@@ -1612,7 +1563,7 @@ def test_semdedup_null_vector_treated_as_zero(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cent_id bigint, cvec array<double>"
     )
     out = {r["vec_id"]: r for r in
-           semdedup(emb, cents, threshold=0.9, keep="min_id", assign="inline").collect()}
+           semdedup(emb, cents, threshold=0.9, keep="min_id").collect()}
     assert out[3]["kept"] and out[3]["cent_id"] == 0 and out[3]["cent_sim"] == 0.0
     assert out[1]["kept"] and not out[2]["kept"]
 
@@ -1650,8 +1601,7 @@ def test_incremental_semdedup_equals_full_corpus_run(spark):
         "cent_id bigint, cvec array<double>",
     )
     full = {r["vec_id"]: (r["cent_id"], r["kept"]) for r in
-            semdedup(emb, cents, threshold=tau, keep="min_id",
-                     assign="inline").collect()}
+            semdedup(emb, cents, threshold=tau, keep="min_id").collect()}
     assert sum(1 for _, kk in full.values() if not kk) >= 5
 
     for t in ("inc_sd_members", "inc_sd_cents", "inc_sd_meta"):
@@ -1780,49 +1730,52 @@ def test_semdedup_float32_scoring_parity_on_separated_data(spark):
         "cent_id bigint, cvec array<double>",
     )
     f64 = {r["vec_id"]: r["kept"] for r in semdedup(
-        emb, cents, threshold=0.9, keep="far", assign="inline").collect()}
+        emb, cents, threshold=0.9, keep="far").collect()}
     f32 = {r["vec_id"]: r["kept"] for r in semdedup(
-        emb, cents, threshold=0.9, keep="far", assign="inline",
-        score_dtype="float32").collect()}
+        emb, cents, threshold=0.9, keep="far", score_dtype="float32").collect()}
     assert f64 == f32 == {1: False, 2: False, 3: True, 4: True}
 
 
 def test_semdedup_inline_strategy_parity_and_single_exchange(spark):
-    """assign="inline" (r14, the catalog and bench path: scalar-UDF
-    struct assignment on the carried row — no Arrow re-encode of the
-    vector column out of Python AND no id rejoin) matches the declarative
-    oracle form on real data at both scoring dtypes — cent_id and kept
-    exactly, cent_sim within 1e-12 (float64) / 1e-6 (float32) — and its
-    plan's ONLY Exchange is the cent_id group shuffle, which moves the
-    vectors exactly once."""
+    """semdedup's assignment (scalar-UDF struct on the carried row — no
+    Arrow re-encode of the vector column out of Python AND no id rejoin)
+    matches numpy on real data at both scoring dtypes — cent_id exactly,
+    cent_sim within 1e-12 (float64) / 1e-6 (float32) — the keep decision
+    matches the Python oracle, and the plan's ONLY Exchange is the
+    cent_id group shuffle, which moves the vectors exactly once."""
+    import numpy as np
+
     from semantic_vector_search_system_spark.operators.similarity import semdedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = emb.filter("vec_id < 8").selectExpr(
         "vec_id AS cent_id", "embedding AS cvec"
     )
+    ids, Xn = _unit_rows(emb, "vec_id", "embedding")
+    cids, Cn = _unit_rows(cents, "cent_id", "cvec")
+    S = Xn @ Cn.T
+    best = np.argmax(S, axis=1)  # first max = lower cent_id
+    want = {
+        vid: (cids[best[i]], S[i, best[i]]) for i, vid in enumerate(ids)
+    }
+    kept = _py_semdedup(ids, Xn, Cn, 0.32, "far")
+    # the threshold is inside the similarity mass -> both classes present
+    assert 0 < sum(kept.values()) < 500
     for dt, tol in (("float64", 1e-12), ("float32", 1e-6)):
-        # value-pin BOTH scoring dtypes against the oracle form at the
-        # SAME dtype (r14 ADVICE, low: the f32 inline path used to be
-        # plan-gated only, leaving its keep-set unpinned)
-        a = {r["vec_id"]: r for r in semdedup(
-            emb, cents, threshold=0.32, keep="far", assign="expr",
-            score_dtype=dt,
-        ).collect()}
         plan_df = semdedup(
-            emb, cents, threshold=0.32, keep="far", assign="inline",
-            score_dtype=dt,
+            emb, cents, threshold=0.32, keep="far", score_dtype=dt
         )
         # read the plan BEFORE executing: a finalized AQE plan string
         # repeats the Exchange in its "Initial Plan" section
         plan = plan_df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 1, plan[:4000]
-        b = {r["vec_id"]: r for r in plan_df.collect()}
-        assert set(a) == set(b) and len(a) == 500, dt
-        for vid, ra in a.items():
-            rb = b[vid]
-            assert (ra["cent_id"], ra["kept"]) == (rb["cent_id"], rb["kept"]), (dt, vid)
-            assert abs(ra["cent_sim"] - rb["cent_sim"]) <= tol, (dt, vid)
+        got = {r["vec_id"]: r for r in plan_df.collect()}
+        assert set(got) == set(want) and len(got) == 500, dt
+        for vid, (cid, csim) in want.items():
+            r = got[vid]
+            assert r["cent_id"] == cid, (dt, vid)
+            assert abs(r["cent_sim"] - csim) <= tol, (dt, vid)
+            assert r["kept"] == kept[vid], (dt, vid)
 
 
 def test_semdedup_giant_cluster_guard_exact_and_bounded(spark):
@@ -1863,14 +1816,12 @@ def test_semdedup_giant_cluster_guard_exact_and_bounded(spark):
     for keep in ("far", "min_id"):
         plain = {
             r["vec_id"]: (r["cent_id"], round(r["cent_sim"], 9), r["kept"])
-            for r in semdedup(
-                emb, cents, threshold=tau, keep=keep, assign="inline"
-            ).collect()
+            for r in semdedup(emb, cents, threshold=tau, keep=keep).collect()
         }
         guarded = {
             r["vec_id"]: (r["cent_id"], round(r["cent_sim"], 9), r["kept"])
             for r in semdedup(
-                emb, cents, threshold=tau, keep=keep, assign="inline",
+                emb, cents, threshold=tau, keep=keep,
                 max_cluster_rows=cap,
             ).collect()
         }
@@ -1881,15 +1832,13 @@ def test_semdedup_giant_cluster_guard_exact_and_bounded(spark):
     ungated_cap = {
         r["vec_id"]: r["kept"]
         for r in semdedup(
-            emb, cents, threshold=tau, keep="min_id", assign="inline",
+            emb, cents, threshold=tau, keep="min_id",
             max_cluster_rows=10_000,
         ).collect()
     }
     plain_min = {
         r["vec_id"]: r["kept"]
-        for r in semdedup(
-            emb, cents, threshold=tau, keep="min_id", assign="inline"
-        ).collect()
+        for r in semdedup(emb, cents, threshold=tau, keep="min_id").collect()
     }
     assert ungated_cap == plain_min
 
@@ -1897,15 +1846,12 @@ def test_semdedup_giant_cluster_guard_exact_and_bounded(spark):
 def test_ivf_topk_filtered_matches_bruteforce_filtered_when_probing_all(spark):
     """Filtered ANN, pre-filter semantics: with nprobe = n_lists (every list
     probed) filtered IVF must equal the exact brute-force top-k of the
-    filtered corpus — on BOTH physical faces (HOF + BLAS cogroup)."""
+    filtered corpus."""
     import pyspark.sql.functions as F
     from semantic_vector_search_system_spark.operators.search import (
         topk_bruteforce,
     )
-    from semantic_vector_search_system_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_fast,
-    )
+    from semantic_vector_search_system_spark.operators.similarity import ivf_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = emb.filter(F.col("vec_id") < 8).select(
@@ -1924,12 +1870,11 @@ def test_ivf_topk_filtered_matches_bruteforce_filtered_when_probing_all(spark):
             q, d, k=5, metric="cosine", predicate=pred
         ).collect()
     }
-    for face in (ivf_topk, ivf_topk_fast):
-        got = {
-            (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
-            for r in face(q, d, cents, k=5, nprobe=8, predicate=pred).collect()
-        }
-        assert got == exact, face.__name__
+    got = {
+        (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
+        for r in ivf_topk(q, d, cents, k=5, nprobe=8, predicate=pred).collect()
+    }
+    assert got == exact
     # and every hit satisfies the predicate (pre-filter, never post-filter)
     labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
     assert all(labels[docid] == 3 for docid, _ in exact.values())
@@ -1938,13 +1883,14 @@ def test_ivf_topk_filtered_matches_bruteforce_filtered_when_probing_all(spark):
 def test_ivf_search_partitioned_filtered_pushes_data_filter(spark, tmp_path):
     """Filtered serving against the cent_id-partitioned index: the metadata
     predicate reaches the parquet reader as a pushed data filter stacked on
-    the cent_id partition filter, and results equal the in-memory filtered
-    ivf_topk on identical centroids/nprobe."""
+    the cent_id partition filter, and results equal the numpy IVF
+    reference over the filtered corpus at the widened probe count."""
     import pyspark.sql.functions as F
     from semantic_vector_search_system_spark.operators.similarity import (
+        effective_nprobe,
+        estimate_selectivity,
         ivf_assign_fast,
         ivf_search_partitioned,
-        ivf_topk,
     )
     from semantic_vector_search_system_spark.sources.parquet_index import (
         write_vector_index,
@@ -1968,15 +1914,16 @@ def test_ivf_search_partitioned_filtered_pushes_data_filter(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     pred = F.col("label") == 3
-    expected = {
-        (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
-        for r in ivf_topk(q, d, cents, k=5, nprobe=2, predicate=pred).collect()
-    }
+    # the served path estimates selectivity from the same content-hash
+    # sample of the same rows, so it widens the probe to the same count
+    eff = effective_nprobe(2, estimate_selectivity(d, pred, hash_col="docid"))
+    expected = _ivf_reference(q, d.filter(pred), cents, k=5, nprobe=eff)
     for strategy in ("broadcast", "cogroup"):
         served = ivf_search_partitioned(
             spark, idx, cents, q, k=5, nprobe=2, predicate=pred,
             strategy=strategy,
         )
+        assert served.eff_nprobe == eff, strategy
         got = {
             (r["qid"], r["rank"]): (r["docid"], round(r["score"], 6))
             for r in served.collect()

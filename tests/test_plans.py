@@ -367,7 +367,7 @@ def test_driver_window_covers_every_operator_family():
         "perceptron_quality_weights", "robots_page_filter",
         # CHANGED faces this round (r14 VERDICT "Next #3"/#4): the rows
         # now run the SAME implementations the bench times
-        "semdedup_keep_one",          # assign="inline"
+        "semdedup_keep_one",          # inline assignment
         "span_dedup",                 # arrow chunker
         "quality_classifier_report",  # strategy="fast" (was in-window)
         # index lifecycle rows (r14-changed O(churn) upsert path — keep

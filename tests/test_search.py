@@ -308,7 +308,7 @@ def test_topk_bruteforce_heap_ranker_agrees(spark, fixture_vecs):
 @pytest.mark.parametrize(
     "knob, bad",
     [
-        ("semdedup.assign", "inlin"),
+        ("semdedup.keep", "fa"),
         ("topk_bruteforce.mode", "distributd"),
         ("topk_bruteforce.ranker", "windw"),
         ("ivf_search_partitioned.strategy", "broadcst"),
@@ -326,9 +326,9 @@ def test_unknown_knob_value_raises(spark, fixture_vecs, knob, bad):
     qvec, dvec = fixture_vecs
     cents = dvec.selectExpr("docid AS cent_id", "vec AS cvec")
     calls = {
-        "semdedup.assign": (
-            lambda: semdedup(dvec, cents, id_col="docid", vec_col="vec", assign=bad),
-            "expr|inline",
+        "semdedup.keep": (
+            lambda: semdedup(dvec, cents, id_col="docid", vec_col="vec", keep=bad),
+            "far|min_id",
         ),
         "topk_bruteforce.mode": (
             lambda: topk_bruteforce(qvec, dvec, k=2, mode=bad),
