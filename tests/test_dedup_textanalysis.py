@@ -1552,6 +1552,20 @@ def test_semdedup_matches_python_oracle(spark):
         assert sum(1 for v in expect.values() if not v) >= 15  # planted dups fired
 
 
+def test_semdedup_fast_form_single_exchange(spark):
+    """100 TB property of the default (inline) form: the assignment rides
+    on the carried row with no rejoin; the ONLY Exchange in the whole plan
+    is the cent_id group shuffle."""
+    from semantic_vector_search_system_spark.operators.similarity import semdedup
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    cents = emb.filter("vec_id < 8").selectExpr(
+        "vec_id AS cent_id", "embedding AS cvec"
+    )
+    plan = semdedup(emb, cents, threshold=0.32)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan[:4000]
+
+
 def test_semdedup_null_vector_treated_as_zero(spark):
     from semantic_vector_search_system_spark.operators.similarity import semdedup
 
